@@ -61,7 +61,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -624,11 +624,7 @@ def agg_tree_index(searcher, body: dict, text_col: str = "text") -> DataFrame:
     the shared finisher produce the identical frame. ``match_all`` scope
     skips postings and runs the declarative base over the stored docs."""
     from ..functions.tokenizer import tokenize
-    from ..plans.query_index import (
-        _arrow_ddl,
-        _facet_match_ids,
-        _one_task_per_shard,
-    )
+    from ..plans.query_index import _arrow_ddl, _matched_docs, _scatter
     import pyarrow.dataset as pads
 
     tree = parse_agg_tree(body, text_col)
@@ -638,16 +634,9 @@ def agg_tree_index(searcher, body: dict, text_col: str = "text") -> DataFrame:
         return _finish(_base_from_docs(docs, tree), tree)
 
     fields = _metric_fields(tree)
-    terms = sorted(set(tokenize(tree.query)))
-    dfreq, term_shards = searcher._query_meta_terms(terms)
-    present = [t for t in terms if t in dfreq]
-    shard_sets = [term_shards[t] for t in present]
-    if tree.mode == "and":
-        active = sorted(set.intersection(*shard_sets)) if (
-            shard_sets and len(present) == len(terms)
-        ) else []
-    else:
-        active = sorted(set.union(*shard_sets)) if shard_sets else []
+    _, present, shards = searcher._active_shards(
+        sorted(set(tokenize(tree.query))), tree.mode
+    )
 
     doc_schema = pads.dataset(f"{index_dir}/docs/shard=0", format="parquet").schema
     parts: list[str] = []
@@ -669,34 +658,22 @@ def agg_tree_index(searcher, body: dict, text_col: str = "text") -> DataFrame:
                        | ({tree.child.field} if tree.child else set()))
     tree_ref, mode = tree, tree.mode
 
-    def shard_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for shard in pdf["shard"].tolist():
-                ids = _facet_match_ids(index_dir, shard, present, mode)
-                if len(ids) == 0:
-                    continue
-                dt = (
-                    pads.dataset(f"{index_dir}/docs/shard={shard}",
-                                 format="parquet")
-                    .to_table(columns=read_cols).to_pandas()
-                )
-                sub = dt.loc[np.isin(dt["doc_id"].to_numpy(), ids,
-                                     assume_unique=True)].copy()
-                if tree_ref.root is None:
-                    yield _pd_partials(sub, fields, None)
-                    continue
-                sub["_k0"] = _pd_key(sub, tree_ref.root)
-                sub = sub.loc[sub["_k0"].notna()]
-                if len(sub) == 0:
-                    continue
-                if tree_ref.child is not None:
-                    sub["_k1"] = _pd_key(sub, tree_ref.child)
-                yield _pd_partials(sub, fields, key_cols)
+    def shard_partials(shard: int) -> pd.DataFrame | None:
+        sub = _matched_docs(index_dir, shard, present, mode, read_cols)
+        if sub is None:
+            return None
+        if tree_ref.root is None:
+            return _pd_partials(sub, fields, None)
+        sub = sub.assign(_k0=_pd_key(sub, tree_ref.root))
+        sub = sub.loc[sub["_k0"].notna()]
+        if len(sub) == 0:
+            return None
+        if tree_ref.child is not None:
+            sub = sub.assign(_k1=_pd_key(sub, tree_ref.child))
+        return _pd_partials(sub, fields, key_cols)
 
-    if active:
-        base = _one_task_per_shard(spark, active).mapInPandas(
-            shard_partials, partial_schema
-        )
+    if shards:
+        base = _scatter(spark, shards, shard_partials, partial_schema)
         if key_cols:
             base = base.groupBy(*key_cols).agg(*_merge_exprs(fields))
         else:

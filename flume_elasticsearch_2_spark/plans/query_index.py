@@ -4,33 +4,32 @@ Scatter/gather shape mirrors ES query-then-fetch (the [delegated] layer at
 /root/reference/elasticsearch-sink/.../ElasticsearchSink.java:66):
 
 1. driver tokenizes the query with the index-time analyzer (Q1),
-2. term stats (df) come from a pruned read of ``terms/`` (Q2),
-3. each shard scores its doc range independently — posting decode + DAAT
-   accumulation in NumPy inside a cogrouped ``applyInPandas`` (Q3/Q4),
-   with **block-max pruning** (Q5): per-128-doc blocks carry max-tf
-   metadata; doc-range segments are processed in descending score-upper-
-   bound order and processing stops as soon as the next segment's bound
-   cannot beat the current k-th score. Skipped blocks are never decoded
-   (lazy Stream-VByte slice decode via the control stream).
+2. term stats (df) and the shards holding each term come from one
+   column-pruned, term-filtered read of ``postings/``
+   (:meth:`IndexSearcher._query_meta`, no Spark job); the one activation
+   rule (:meth:`IndexSearcher._active_shards`) keeps the union of those
+   shards for OR and their intersection for AND/phrase (Q2),
+3. :func:`_scatter` starts one task per active shard; each task's kernel
+   reads its own shard's postings + norms straight from Parquet (pyarrow,
+   column-pruned, term-filtered) and scores its doc range — posting decode
+   + DAAT accumulation in NumPy (Q3/Q4) with **block-max pruning** (Q5):
+   per-128-doc blocks carry max-tf metadata; doc-range segments are
+   processed in descending score-upper-bound order and processing stops as
+   soon as the next segment's bound cannot beat the current k-th score.
+   Skipped blocks are never decoded (lazy Stream-VByte slice decode via the
+   control stream),
 4. per-shard top-k rows are merged on the driver by ``(-score, doc_id)``
-   (Q6 gather + Q7 deterministic tie-break).
+   (:func:`_topk`: Q6 gather + Q7 deterministic tie-break).
 
 Parquet reads are pruned two ways: ``shard=`` directory partition pruning
 and ``term IN (...)`` row-group predicate pushdown (postings files are
 sorted by term at write).
 
-Two physical engines, rank-identical by construction and by test:
-
-* ``engine="direct"`` (default): shuffle-FREE scatter/gather. The index is
-  already partitioned by shard on disk, so each executor task reads its own
-  shard's postings + norms straight from Parquet (pyarrow, column-pruned,
-  term-filtered) and returns its local top-k — exactly an ES data node
-  serving a shard-level query. One narrow stage, no exchange, per-query
-  driver work is a single metadata read. On a cluster the segment store
-  would be HDFS/S3 (pyarrow reads both natively).
-* ``engine="cogroup"``: the declarative shape (groupBy(shard).cogroup →
-  applyInPandas) — Catalyst-planned, used as an independent implementation
-  to cross-check the direct path.
+The index is already partitioned by shard on disk, so the scatter is one
+narrow stage with no exchange — an ES data node serving a shard-level
+query. The ``*_local`` methods run the same plan and kernels one shard at
+a time on the calling thread, without a Spark job. On a cluster the
+segment store would be HDFS/S3 (pyarrow reads both natively).
 """
 
 from __future__ import annotations
@@ -38,7 +37,7 @@ from __future__ import annotations
 import json
 import os
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -1046,20 +1045,6 @@ def _pd_filter_mask(dt: pd.DataFrame, triples: list[tuple]) -> np.ndarray:
     return m
 
 
-def _read_postings_docstream(index_dir: str, shard: int, terms: list[str]) -> pd.DataFrame:
-    """Postings for ``terms`` in one shard, doc-id stream columns only (tf /
-    position streams never read) — the candidate-set read for constant_score
-    and facets."""
-    return (
-        pads.dataset(f"{index_dir}/postings/shard={shard}", format="parquet")
-        .to_table(
-            columns=["term", "n", "doc_bytes", "block_first_doc"],
-            filter=pads.field("term").isin(terms),
-        )
-        .to_pandas()
-    )
-
-
 def _decode_posting_doc_ids(row) -> np.ndarray:
     """Full doc-id stream of one posting row (global ids, ascending)."""
     n = int(row.n)
@@ -1076,8 +1061,16 @@ def _decode_posting_doc_ids(row) -> np.ndarray:
 def _facet_match_ids(index_dir: str, shard: int, terms: list[str], mode: str) -> np.ndarray:
     """Global doc ids in one shard matching the query terms (OR: union,
     AND: ids present under every term — docs live in exactly one shard, so
-    the per-shard intersection is the global AND)."""
-    pt = _read_postings_docstream(index_dir, shard, terms)
+    the per-shard intersection is the global AND). Reads the doc-id stream
+    columns only; tf / position streams are never read."""
+    pt = (
+        pads.dataset(f"{index_dir}/postings/shard={shard}", format="parquet")
+        .to_table(
+            columns=["term", "n", "doc_bytes", "block_first_doc"],
+            filter=pads.field("term").isin(terms),
+        )
+        .to_pandas()
+    )
     by_term: dict[str, list[np.ndarray]] = {}
     for row in pt.itertuples(index=False):
         by_term.setdefault(row.term, []).append(_decode_posting_doc_ids(row))
@@ -1103,13 +1096,128 @@ def _serving_check_window(size: int, from_: int) -> None:
     _check_window(size, from_)
 
 
-def _one_task_per_shard(spark: SparkSession, shards: list[int]) -> DataFrame:
-    """(shard) DataFrame pre-sliced one shard per partition — the scatter
-    needs exactly one task per shard, and building the slices directly
-    (parallelize with numSlices=len) avoids the repartition exchange a
-    createDataFrame().repartition() plan would pay on every query."""
-    rdd = spark.sparkContext.parallelize([(s,) for s in shards], max(1, len(shards)))
-    return spark.createDataFrame(rdd, "shard int")
+def _matched_docs(
+    index_dir: str, shard: int, terms: list[str], mode: str, cols: list[str]
+) -> pd.DataFrame | None:
+    """Docs-table rows (``cols``, which include ``doc_id``) of one shard's
+    query match set, decoded from postings doc streams; None when nothing
+    in the shard matches — the read every facet/sort kernel starts with."""
+    ids = _facet_match_ids(index_dir, shard, terms, mode)
+    if len(ids) == 0:
+        return None
+    dt = (
+        pads.dataset(f"{index_dir}/docs/shard={shard}", format="parquet")
+        .to_table(columns=cols)
+        .to_pandas()
+    )
+    return dt.loc[np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)]
+
+
+def _direct_kernel(
+    index_dir: str,
+    present: list[str],
+    kwargs: dict[str, Any],
+    doc_filter: tuple | None = None,
+    mn_terms: list[str] | None = None,
+    must_terms: list[str] | None = None,
+    must_mode: str = "or",
+    extra_doc_cols: list[str] | None = None,
+) -> Callable[[int], pd.DataFrame]:
+    """The BM25 shard kernel: read one shard's postings (term-filtered) and
+    docs, apply the admitted-docs masks, score with :func:`_score_shard`.
+    ``mn_terms`` (ES must_not): their doc streams are decoded and the
+    matching ids are dropped from the admitted docs table, which makes the
+    scorer's ``present`` mask exclude them from every candidate set.
+    ``must_terms`` is the mirror-image mask-IN (the ``common`` query's
+    low-frequency selector, the 1.x query filter): only docs whose ids
+    appear in those terms' doc streams (``must_mode``: 'or' = any, 'and' =
+    all) stay admitted. Both masks only shrink the candidate set, so BMW
+    pruning bounds remain admissible."""
+
+    def kernel(shard: int) -> pd.DataFrame:
+        pt, dt = _read_shard_tables(
+            index_dir, shard, present, doc_filter, extra_doc_cols=extra_doc_cols
+        )
+        if must_terms:
+            dt = dt[dt["doc_id"].isin(_facet_match_ids(index_dir, shard, must_terms, must_mode))]
+        if mn_terms:
+            excl = _facet_match_ids(index_dir, shard, mn_terms, "or")
+            if len(excl):
+                dt = dt[~dt["doc_id"].isin(excl)]
+        return _score_shard(pt, dt, **kwargs)
+
+    return kernel
+
+
+def _scatter(
+    spark: SparkSession,
+    tasks: list,
+    kernel: Callable[[Any], pd.DataFrame | None],
+    schema: str,
+) -> DataFrame:
+    """The one Python-task boundary of the serving path: one Spark task per
+    entry of ``tasks`` (a shard, or a ``(dir, shard)`` pair across
+    generations), each running ``kernel(task)`` and emitting its pandas
+    partial (``None`` = nothing). The task list is pre-sliced one entry per
+    partition (parallelize with numSlices=len), so the plan is one narrow
+    stage with no repartition exchange. ``kernel`` is shipped to the
+    executors and must not capture the searcher. No tasks, no job."""
+    if not tasks:
+        return spark.createDataFrame([], schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["i"].tolist():
+                out = kernel(tasks[i])
+                if out is not None:
+                    yield out
+
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(len(tasks))], len(tasks))
+    return spark.createDataFrame(rdd, "i int").mapInPandas(run, schema)
+
+
+_HITS = "doc_id long, score double"
+
+
+def _page(top: list[tuple[int, float]]) -> pd.DataFrame:
+    """A :func:`_topk` page as a typed pandas (doc_id, score) frame."""
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series([d for d, _ in top], dtype="int64"),
+            "score": pd.Series([s for _, s in top], dtype="float64"),
+        }
+    )
+
+
+def _hits(spark: SparkSession, top: list[tuple[int, float]] = ()) -> DataFrame:
+    """A (doc_id, score) page as a DataFrame — empty by default. Built from
+    pandas through Arrow, it is a local relation: collecting it starts no
+    Spark job (a DataFrame made from a Python list is an RDD, and its
+    collect would be a second job after the scatter)."""
+    return spark.createDataFrame(_page(list(top)), _HITS)
+
+
+def _topk(rows, k: int, from_: int = 0) -> list[tuple[int, float]]:
+    """The coordinator gather: ``(doc_id, score)`` rows ranked by
+    ``(-score, doc_id)``, sliced to ``[from_, from_ + k)`` and rounded with
+    the engine-exact :func:`round_half_up6`."""
+    ranked = sorted(rows, key=lambda r: (-r[1], r[0]))
+    return [(int(d), round_half_up6(s)) for d, s in ranked[from_ : from_ + k]]
+
+
+def _scatter_topk(
+    spark: SparkSession, tasks: list, kernel: Callable[[Any], pd.DataFrame], k: int
+) -> DataFrame:
+    """Scatter a (doc_id, score) kernel and gather its top-k page."""
+    return _hits(spark, _topk(_scatter(spark, tasks, kernel, _HITS).collect(), k))
+
+
+def _local_topk(parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
+    """:func:`_topk` over the partials a ``*_local`` method scored on the
+    calling thread, as its pandas (doc_id, score) result."""
+    return _page(
+        _topk([r for p in parts for r in zip(p["doc_id"].tolist(), p["score"].tolist())], k)
+    )
 
 
 class IndexSearcher:
@@ -1133,7 +1241,7 @@ class IndexSearcher:
         )
         return {r["term"]: int(r["df"]) for r in rows}
 
-    def _query_meta_terms(
+    def _query_meta(
         self, terms: list[str]
     ) -> tuple[dict[str, int], dict[str, set[int]]]:
         """Driver-side metadata read: global df per term (= sum over shards
@@ -1158,12 +1266,95 @@ class IndexSearcher:
             term_shards.setdefault(term, set()).add(int(shard))
         return dfreq, term_shards
 
-    def _query_meta(self, terms: list[str]) -> tuple[dict[str, int], list[int]]:
-        dfreq, term_shards = self._query_meta_terms(terms)
-        shard_set: set[int] = set()
-        for s in term_shards.values():
-            shard_set |= s
-        return dfreq, sorted(shard_set)
+    def _active_shards(
+        self,
+        terms: list[str],
+        mode: str = "or",
+        meta: tuple[dict[str, int], dict[str, set[int]]] | None = None,
+    ) -> tuple[dict[str, int], list[str], list[int]]:
+        """The serving path's one shard-activation rule. Returns ``(dfreq,
+        present, shards)`` for the query ``terms``: df per indexed term, the
+        indexed terms in ``terms`` order, and the sorted shards a match can
+        live in — the union of the present terms' shards for ``or``, their
+        intersection for ``and``/``phrase`` (empty when a term is missing
+        from the index). Docs live in exactly one shard, so no other shard
+        can hold a match. ``meta`` reuses one :meth:`_query_meta` read
+        across a batch of queries."""
+        terms = list(dict.fromkeys(terms))  # a repeated term is one term
+        if not terms:
+            return {}, [], []
+        dfreq, term_shards = meta if meta is not None else self._query_meta(terms)
+        present = [t for t in terms if t in dfreq]
+        sets = [term_shards[t] for t in present]
+        if mode == "or":
+            shards = set().union(*sets)
+        elif sets and len(present) == len(terms):
+            shards = set.intersection(*sets)
+        else:
+            shards = set()
+        return dfreq, present, sorted(shards)
+
+    def _bm25_plan(
+        self,
+        query: str,
+        k: int,
+        mode: str,
+        pruned: bool,
+        doc_filter: tuple | None,
+        msm: int | None,
+        boosts: dict[str, float] | None = None,
+        from_: int = 0,
+        must_not: str | None = None,
+        filter_query: tuple[str, str] | None = None,
+    ) -> tuple[list[int], dict[str, Any]] | None:
+        """Planning shared by :meth:`search` and :meth:`search_local`: the
+        active shards and the :func:`_direct_kernel` arguments, or None when
+        no doc can match."""
+        weights = {
+            t: c * float((boosts or {}).get(t, 1.0))
+            for t, c in Counter(tokenize(query)).items()
+        }
+        dfreq, present, shards = self._active_shards(sorted(weights), mode)
+        if not shards or (msm is not None and len(present) < msm):
+            return None
+        # ES index.max_result_window: every shard heaps from_+k entries, so an
+        # unbounded from_ is a per-shard memory bomb (search_sorted already
+        # enforces this; the scored path must too)
+        _serving_check_window(k, from_)
+        must_terms, must_mode = None, "or"
+        if filter_query is not None:
+            # 1.x query/fquery filter: candidates must contain ANY/ALL of the
+            # filter query's analyzed terms — the common-terms mask-IN
+            # machinery (must_terms), computed from the index's own doc
+            # streams; scoring/stats untouched, BMW bounds stay admissible
+            # (the mask only shrinks the candidate set)
+            must_terms = sorted(set(tokenize(filter_query[0]))) or None
+            must_mode = filter_query[1]
+            if must_mode not in ("or", "and"):
+                raise ValueError(f"filter_query mode {must_mode!r}")
+            if must_terms is None and must_mode == "or":
+                # empty analyzed filter: 'and' admits everything, 'or' nothing
+                return None
+        kwargs = dict(
+            weights=weights,
+            dfreq=dfreq,
+            n_docs=self.n_docs,
+            avgdl=self.avgdl,
+            id_space=self.id_space,
+            n_shards=self.n_shards,
+            k=k + from_,
+            mode=mode,
+            pruned=pruned,
+            msm=msm,
+        )
+        return shards, dict(
+            present=present,
+            kwargs=kwargs,
+            doc_filter=doc_filter,
+            mn_terms=sorted(set(tokenize(must_not))) if must_not else [],
+            must_terms=must_terms,
+            must_mode=must_mode,
+        )
 
     def search(
         self,
@@ -1172,7 +1363,6 @@ class IndexSearcher:
         mode: str = "or",
         pruned: bool = True,
         fetch: bool = False,
-        engine: str = "direct",
         doc_filter: tuple | None = None,
         min_should_match: int | None = None,
         boosts: dict[str, float] | None = None,
@@ -1185,101 +1375,36 @@ class IndexSearcher:
         Rank-identical to the declarative path (operators/topk.py) and the
         NumPy/DuckDB oracles; scores rounded to 6 decimals in the output.
         ``doc_filter`` = (column, op, value) over docs-table attributes —
-        ES bool-filter semantics (see ``_read_shard_tables``); the direct
-        engine only. ``from_`` pages into the ranked list (ES ``from``/
-        ``size``): every shard returns its local top-(from_+k) — the ES
-        deep-paging cost shape — and the gather slices [from_, from_+k).
-        ``must_not`` (direct engine): ES bool negative clause — the string
-        is analyzed and docs containing ANY resulting term are excluded by
-        masking their ids out of the shard's admitted set (doc streams of
-        the negative terms decoded, tf/positions never read); non-scoring,
-        stats index-wide, BMW bounds untouched (the mask only shrinks the
-        candidate set, so pruning stays admissible)."""
-        spark = self.spark
-        q_terms = tokenize(query)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not q_terms:
-            return empty
-        weights = {
-            t: c * float((boosts or {}).get(t, 1.0)) for t, c in Counter(q_terms).items()
-        }
-        dfreq, active_shards = self._query_meta(sorted(weights))
-        present = sorted(t for t in weights if t in dfreq)
-        if not present or (mode == "and" and len(present) < len(weights)):
-            return empty
-        if min_should_match is not None and len(present) < min_should_match:
-            return empty
-        # ES index.max_result_window: every shard heaps from_+k entries, so an
-        # unbounded from_ is a per-shard memory bomb (search_sorted already
-        # enforces this; the scored path must too)
-        _serving_check_window(k, from_)
-        kwargs = dict(
-            weights=weights,
-            dfreq=dfreq,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k + from_,
-            mode=mode,
-            pruned=pruned,
-            msm=min_should_match,
+        ES bool-filter semantics (see ``_read_shard_tables``). ``from_``
+        pages into the ranked list (ES ``from``/``size``): every shard
+        returns its local top-(from_+k) — the ES deep-paging cost shape —
+        and the gather slices [from_, from_+k). ``must_not``: ES bool
+        negative clause — the string is analyzed and docs containing ANY
+        resulting term are excluded by masking their ids out of the shard's
+        admitted set (doc streams of the negative terms decoded,
+        tf/positions never read); non-scoring, stats index-wide, BMW bounds
+        untouched (the mask only shrinks the candidate set, so pruning
+        stays admissible). ``filter_query`` = (query, 'or'|'and'): the 1.x
+        query filter, a non-scoring mask-IN of the docs holding any/all of
+        its analyzed terms."""
+        plan = self._bm25_plan(
+            query, k, mode, pruned, doc_filter, min_should_match, boosts, from_,
+            must_not, filter_query,
         )
-
-        mn_terms = sorted(set(tokenize(must_not))) if must_not else []
-        fq_terms, fq_mode = None, "or"
-        if filter_query is not None:
-            # 1.x query/fquery filter: candidates must contain ANY/ALL of the
-            # filter query's analyzed terms — the common-terms mask-IN
-            # machinery (must_terms), computed from the index's own doc
-            # streams; scoring/stats untouched, BMW bounds stay admissible
-            # (the mask only shrinks the candidate set)
-            if engine != "direct":
-                raise ValueError("filter_query needs the direct engine")
-            fq_terms = sorted(set(tokenize(filter_query[0]))) or None
-            fq_mode = filter_query[1]
-            if fq_mode not in ("or", "and"):
-                raise ValueError(f"filter_query mode {fq_mode!r}")
-            if fq_terms is None:
-                # empty analyzed filter: 'and' admits everything, 'or' nothing
-                if fq_mode == "or":
-                    return empty
-        if engine == "direct":
-            # single narrow stage: per-shard top-k tasks -> collect -> heap
-            # merge ON THE DRIVER (the ES coordinating-node gather). Collecting
-            # here instead of orderBy().limit() removes the TakeOrdered stage
-            # and its scheduling round-trip — at most n_shards * (from_+k)
-            # tiny rows cross the wire, never postings.
-            rows = self._scatter_direct(
-                active_shards, present, kwargs, doc_filter, mn_terms,
-                must_terms=fq_terms, must_mode=fq_mode,
-            ).collect()
-            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            out = spark.createDataFrame(
-                [
-                    (int(r["doc_id"]), round_half_up6(r["score"]))
-                    for r in rows[from_ : from_ + k]
-                ],
-                "doc_id long, score double",
-            )
-        else:
-            if doc_filter is not None or mn_terms:
-                raise ValueError(
-                    "doc_filter/must_not are supported by the direct engine only"
-                )
-            per_shard = self._scatter_cogroup(active_shards, present, kwargs)
-            out = (
-                per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .offset(int(from_))
-                .limit(k)
-                .select("doc_id", F.round("score", 6).alias("score"))
-            )
+        if plan is None:
+            return _hits(self.spark)
+        shards, args = plan
+        # single narrow stage: per-shard top-(from_+k) tasks -> collect ->
+        # merge ON THE DRIVER (the ES coordinating-node gather). Collecting
+        # here instead of orderBy().limit() removes the TakeOrdered stage and
+        # its scheduling round-trip — at most n_shards * (from_+k) tiny rows
+        # cross the wire, never postings.
+        rows = self._scatter_direct(shards, **args).collect()
+        out = _hits(self.spark, _topk(rows, k, from_))
         if fetch:
-            winners = out
-            fetch_cols = spark.read.parquet(f"{self.index_dir}/docs").drop("shard", "dl")
-            out = (
-                winners.join(fetch_cols, "doc_id", "left")
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            fetch_cols = self.spark.read.parquet(f"{self.index_dir}/docs").drop("shard", "dl")
+            out = out.join(fetch_cols, "doc_id", "left").orderBy(
+                F.col("score").desc(), F.col("doc_id").asc()
             )
         return out
 
@@ -1298,7 +1423,7 @@ class IndexSearcher:
         terms — selective by construction — drive everything: active shards
         are only those holding a low term, and per shard the low terms'
         SHORT doc streams are decoded into the admitted-docs mask
-        (``must_terms`` in :meth:`_scatter_direct`). The high-frequency
+        (``must_terms`` in :func:`_direct_kernel`). The high-frequency
         terms' postings are then scored ONLY against that mask — their hot
         doc streams never define the candidate space, which is the entire
         point of CommonTermsQuery at web scale. With no low terms the query
@@ -1306,53 +1431,21 @@ class IndexSearcher:
         the declarative twin)."""
         if low_freq_operator not in ("or", "and"):
             raise ValueError(f"unsupported low_freq_operator {low_freq_operator!r}")
-        spark = self.spark
-        q_terms = tokenize(query)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not q_terms:
-            return empty
-        weights = {t: float(c) for t, c in Counter(q_terms).items()}
-        dfreq, term_shards = self._query_meta_terms(sorted(weights))
-        present = sorted(t for t in weights if t in dfreq)
-        if not present:
-            return empty
+        plan = self._bm25_plan(query, k, "or", pruned, doc_filter, None, must_not=must_not)
+        if plan is None:
+            return _hits(self.spark)
+        shards, args = plan
+        dfreq = args["kwargs"]["dfreq"]
         cutoff_abs = float(cutoff_frequency) * (
             self.n_docs if cutoff_frequency < 1.0 else 1.0
         )
-        low = sorted(t for t in present if dfreq[t] <= cutoff_abs)
-        if low:
-            sets = [term_shards[t] for t in low]
-            active = set.intersection(*sets) if low_freq_operator == "and" else set().union(*sets)
-        else:  # no selective terms: plain OR match over the high group
-            active = set().union(*[term_shards[t] for t in present])
-        if not active:
-            return empty
-        kwargs = dict(
-            weights=weights,
-            dfreq=dfreq,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            mode="or",
-            pruned=pruned,
-        )
-        mn_terms = sorted(set(tokenize(must_not))) if must_not else []
-        rows = self._scatter_direct(
-            sorted(active),
-            present,
-            kwargs,
-            doc_filter,
-            mn_terms,
-            must_terms=low or None,
-            must_mode=low_freq_operator,
-        ).collect()
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+        low = [t for t in args["present"] if dfreq[t] <= cutoff_abs]
+        if low:  # else no selective terms: plain OR match over the high group
+            shards = self._active_shards(low, low_freq_operator)[2]
+            args.update(must_terms=low, must_mode=low_freq_operator)
+        if not shards:
+            return _hits(self.spark)
+        return _hits(self.spark, _topk(self._scatter_direct(shards, **args).collect(), k))
 
     def search_local(
         self,
@@ -1369,45 +1462,56 @@ class IndexSearcher:
         This is the ES data-node request path without the cluster hop — the
         right shape for interactive/low-latency use where the per-query
         Spark task-launch overhead (~0.5-1 s) dwarfs actual scoring (~ms).
-        Rank-identical to :meth:`search` (same _score_shard kernel, same
-        (-score, doc_id) tie-break); tested against it. On a cluster this
+        The plan, the shard kernel and the gather are :meth:`search`'s, so
+        the two are rank-identical; tested against it. On a cluster this
         runs on whatever node holds/mounts the segment store — shards are
         scored sequentially here, so latency grows with active-shard count;
         use :meth:`search` for scatter/gather across executors.
         """
-        q_terms = tokenize(query)
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-        if not q_terms:
-            return empty
-        weights = {t: float(c) for t, c in Counter(q_terms).items()}
-        dfreq, active_shards = self._query_meta(sorted(weights))
-        present = sorted(t for t in weights if t in dfreq)
-        if not present or (mode == "and" and len(present) < len(weights)):
-            return empty
-        if min_should_match is not None and len(present) < min_should_match:
-            return empty
+        plan = self._bm25_plan(query, k, mode, pruned, doc_filter, min_should_match)
+        if plan is None:
+            return _local_topk([], k)
+        shards, args = plan
+        kernel = _direct_kernel(self.index_dir, **args)
+        return _local_topk([kernel(s) for s in shards], k)
+
+    def _phrase_plan(
+        self, phrase: str, k: int, doc_filter: tuple | None, slop: int
+    ) -> tuple[list[int], Callable[[int], pd.DataFrame]] | None:
+        """Planning shared by :meth:`search_phrase` and
+        :meth:`search_phrase_local`: the shards holding every phrase term
+        and the phrase kernel, or None when no doc can match."""
+        import math
+
+        if not self.manifest.get("positions"):
+            raise ValueError(
+                "index stores freqs only — build with store_positions=True for phrase queries"
+            )
+        q_terms = tokenize(phrase)
+        dfreq, terms, shards = self._active_shards(sorted(set(q_terms)), "phrase")
+        if not shards:
+            return None
+        index_dir = self.index_dir
         kwargs = dict(
-            weights=weights,
-            dfreq=dfreq,
-            n_docs=self.n_docs,
+            q_terms=q_terms,
+            idf=sum(
+                math.log1p((self.n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
+                for t in q_terms
+            ),
             avgdl=self.avgdl,
             id_space=self.id_space,
             n_shards=self.n_shards,
             k=k,
-            mode=mode,
-            pruned=pruned,
-            msm=min_should_match,
+            slop=int(slop),
         )
-        parts = []
-        for shard in active_shards:
-            pt, dt = _read_shard_tables(self.index_dir, shard, present, doc_filter)
-            parts.append(_score_shard(pt, dt, **kwargs))
-        merged = pd.concat(parts, ignore_index=True) if parts else empty
-        merged = merged.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).head(k)
-        merged["score"] = merged["score"].map(round_half_up6)
-        return merged.reset_index(drop=True)
+
+        def kernel(shard: int) -> pd.DataFrame:
+            pt, dt = _read_shard_tables(
+                index_dir, shard, terms, doc_filter, cols=POST_COLS_POSITIONAL
+            )
+            return _phrase_score_shard(pt, dt, **kwargs)
+
+        return shards, kernel
 
     def search_phrase(
         self,
@@ -1422,58 +1526,10 @@ class IndexSearcher:
         built with ``store_positions=True`` (Lucene ``index_options``
         analog; manifest records it). Rank-identical to the declarative
         ``operators.topk.bm25_phrase_topk`` by test."""
-        import math
-
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not self.manifest.get("positions"):
-            raise ValueError(
-                "index stores freqs only — build with store_positions=True for phrase queries"
-            )
-        q_terms = tokenize(phrase)
-        if not q_terms:
-            return empty
-        terms = sorted(set(q_terms))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        if any(t not in dfreq for t in terms):
-            return empty
-        shards: set[int] = set(term_shards[terms[0]])
-        for t in terms[1:]:
-            shards &= term_shards[t]
-        if not shards:
-            return empty
-        idf = sum(
-            math.log1p((self.n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5)) for t in q_terms
-        )
-        index_dir = self.index_dir
-        kwargs = dict(
-            q_terms=q_terms,
-            idf=idf,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            slop=int(slop),
-        )
-
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, terms, doc_filter, cols=POST_COLS_POSITIONAL
-                    )
-                    yield _phrase_score_shard(pt, dt, **kwargs)
-
-        rows = (
-            _one_task_per_shard(spark, sorted(shards))
-            .mapInPandas(score_shards, "doc_id long, score double")
-            .collect()
-        )
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+        plan = self._phrase_plan(phrase, k, doc_filter, slop)
+        if plan is None:
+            return _hits(self.spark)
+        return _scatter_topk(self.spark, *plan, k)
 
     def search_span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
         """``span_first`` on the SERVING path (rank-identical to
@@ -1483,8 +1539,6 @@ class IndexSearcher:
         ``store_positions=True``."""
         import math
 
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
         if not self.manifest.get("positions"):
             raise ValueError(
                 "index stores freqs only — build with store_positions=True for span queries"
@@ -1493,37 +1547,23 @@ class IndexSearcher:
             raise ValueError("span_first end must be >= 1")
         if tokenize(term) != [term]:
             raise ValueError(f"span_term {term!r} is not a single analyzed token")
-        dfreq, term_shards = self._query_meta_terms([term])
-        if term not in dfreq:
-            return empty
+        dfreq, _, shards = self._active_shards([term])
+        if not shards:
+            return _hits(self.spark)
         df_t = dfreq[term]
-        idf = math.log1p((self.n_docs - df_t + 0.5) / (df_t + 0.5))
-        shards = sorted(term_shards[term])
         index_dir = self.index_dir
         kwargs = dict(
-            term=term, end=int(end), idf=idf, avgdl=self.avgdl,
-            id_space=self.id_space, n_shards=self.n_shards, k=k,
+            term=term, end=int(end), idf=math.log1p((self.n_docs - df_t + 0.5) / (df_t + 0.5)),
+            avgdl=self.avgdl, id_space=self.id_space, n_shards=self.n_shards, k=k,
         )
 
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, [term], None, cols=POST_COLS_POSITIONAL
-                    )
-                    yield _span_first_score_shard(pt, dt, **kwargs)
+        def kernel(shard: int) -> pd.DataFrame:
+            pt, dt = _read_shard_tables(
+                index_dir, shard, [term], None, cols=POST_COLS_POSITIONAL
+            )
+            return _span_first_score_shard(pt, dt, **kwargs)
 
-        rows = (
-            _one_task_per_shard(spark, shards)
-            .mapInPandas(score_shards, "doc_id long, score double")
-            .collect()
-        )
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
-
+        return _scatter_topk(self.spark, shards, kernel, k)
 
     def search_span_or(self, terms: list[str], k: int = 10) -> DataFrame:
         """``span_or`` on the SERVING path (rank-identical to
@@ -1533,51 +1573,31 @@ class IndexSearcher:
         index suffices — single-term spans never need positions."""
         import math
 
-        from ..functions.tokenizer import tokenize as _tok
-
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
         toks_q = sorted({str(t).lower() for t in terms})
         if not toks_q:
             raise ValueError("span_or needs >= 1 span_term clause")
         for t in toks_q:
-            if _tok(t) != [t]:
+            if tokenize(t) != [t]:
                 raise ValueError(f"span_term {t!r} is not a single analyzed token")
-        dfreq, term_shards = self._query_meta_terms(toks_q)
-        idf_sum = sum(
-            math.log1p(
-                (self.n_docs - dfreq.get(t, 0) + 0.5) / (dfreq.get(t, 0) + 0.5)
-            )
-            for t in toks_q
-        )
-        shard_set: set[int] = set()
-        for s in term_shards.values():
-            shard_set |= s
-        if not shard_set:
-            return empty
-        shards = sorted(shard_set)
+        dfreq, _, shards = self._active_shards(toks_q)
+        if not shards:
+            return _hits(self.spark)
         index_dir = self.index_dir
         kwargs = dict(
-            terms=toks_q, idf_sum=idf_sum, avgdl=self.avgdl,
-            id_space=self.id_space, n_shards=self.n_shards, k=k,
+            terms=toks_q,
+            idf_sum=sum(
+                math.log1p((self.n_docs - dfreq.get(t, 0) + 0.5) / (dfreq.get(t, 0) + 0.5))
+                for t in toks_q
+            ),
+            avgdl=self.avgdl, id_space=self.id_space, n_shards=self.n_shards, k=k,
         )
 
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(index_dir, shard, toks_q, None)
-                    yield _span_or_score_shard(pt, dt, **kwargs)
+        def kernel(shard: int) -> pd.DataFrame:
+            return _span_or_score_shard(
+                *_read_shard_tables(index_dir, shard, toks_q, None), **kwargs
+            )
 
-        rows = (
-            _one_task_per_shard(spark, shards)
-            .mapInPandas(score_shards, "doc_id long, score double")
-            .collect()
-        )
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+        return _scatter_topk(self.spark, shards, kernel, k)
 
     def search_span_multi(
         self,
@@ -1600,7 +1620,7 @@ class IndexSearcher:
             max_expansions=max_expansions,
         )
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _hits(self.spark)
         return self.search_span_or(terms, k=k)
 
     def search_span_not(
@@ -1614,53 +1634,36 @@ class IndexSearcher:
         ``store_positions=True``."""
         import math
 
-        from ..functions.tokenizer import tokenize as _tok
-
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
         if not self.manifest.get("positions"):
             raise ValueError(
                 "index stores freqs only — build with store_positions=True for span queries"
             )
         inc, exc = str(include).lower(), str(exclude).lower()
         for t in (inc, exc):
-            if _tok(t) != [t]:
+            if tokenize(t) != [t]:
                 raise ValueError(f"span_term {t!r} is not a single analyzed token")
         if inc == exc:
             raise ValueError("span_not include and exclude must differ")
         if int(pre) < 0 or int(post) < 0:
             raise ValueError("span_not pre/post must be >= 0")
-        dfreq, term_shards = self._query_meta_terms([inc, exc])
-        if inc not in dfreq:
-            return empty
+        dfreq, _, shards = self._active_shards([inc])
+        if not shards:
+            return _hits(self.spark)
         df_t = dfreq[inc]
-        idf = math.log1p((self.n_docs - df_t + 0.5) / (df_t + 0.5))
-        shards = sorted(term_shards[inc])
         index_dir = self.index_dir
         kwargs = dict(
-            include=inc, exclude=exc, pre=int(pre), post=int(post), idf=idf,
+            include=inc, exclude=exc, pre=int(pre), post=int(post),
+            idf=math.log1p((self.n_docs - df_t + 0.5) / (df_t + 0.5)),
             avgdl=self.avgdl, id_space=self.id_space, n_shards=self.n_shards, k=k,
         )
 
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, [inc, exc], None,
-                        cols=POST_COLS_POSITIONAL,
-                    )
-                    yield _span_not_score_shard(pt, dt, **kwargs)
+        def kernel(shard: int) -> pd.DataFrame:
+            pt, dt = _read_shard_tables(
+                index_dir, shard, [inc, exc], None, cols=POST_COLS_POSITIONAL
+            )
+            return _span_not_score_shard(pt, dt, **kwargs)
 
-        rows = (
-            _one_task_per_shard(spark, shards)
-            .mapInPandas(score_shards, "doc_id long, score double")
-            .collect()
-        )
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+        return _scatter_topk(self.spark, shards, kernel, k)
 
     def search_phrase_prefix(
         self,
@@ -1681,8 +1684,6 @@ class IndexSearcher:
         by g is exact and everything fits in one scatter job."""
         import math
 
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
         if not self.manifest.get("positions"):
             raise ValueError(
                 "index stores freqs only — build with store_positions=True for phrase queries"
@@ -1691,27 +1692,20 @@ class IndexSearcher:
             raise ValueError("slop must be non-negative")
         q_terms = tokenize(phrase)
         if not q_terms:
-            return empty
+            return _hits(self.spark)
         firsts, prefix = q_terms[:-1], q_terms[-1]
         alts = self.expand_terms(prefix, "prefix", max_expansions=max_expansions)
-        if not alts:
-            return empty
         uniq_firsts = sorted(set(firsts))
-        dfreq, term_shards = self._query_meta_terms(sorted(set(uniq_firsts + alts)))
-        if any(t not in dfreq for t in uniq_firsts):
-            return empty
+        dfreq = self._query_meta(uniq_firsts)[0] if alts and uniq_firsts else {}
+        if not alts or any(t not in dfreq for t in uniq_firsts):
+            return _hits(self.spark)
         # scatter to EVERY shard holding an expansion: the global class df is
         # the sum of per-shard expansion-doc-stream unions, and a shard can
         # hold class docs while missing a first term — it then contributes a
         # sentinel row only (the kernel yields no hits there), but skipping
         # it would undercount df_class vs the corpus-wide declarative twin
         # and make idf shard-layout-dependent
-        alt_shards: set[int] = set()
-        for a in alts:
-            alt_shards |= term_shards.get(a, set())
-        shards = alt_shards
-        if not shards:
-            return empty
+        shards = self._active_shards(alts)[2]
         index_dir = self.index_dir
         read_terms = sorted(set(uniq_firsts + alts))
         kwargs = dict(
@@ -1724,31 +1718,23 @@ class IndexSearcher:
             slop=int(slop),
         )
 
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, read_terms, None, cols=POST_COLS_POSITIONAL
-                    )
-                    yield _phrase_prefix_score_shard(pt, dt, **kwargs)
+        def kernel(shard: int) -> pd.DataFrame:
+            pt, dt = _read_shard_tables(
+                index_dir, shard, read_terms, None, cols=POST_COLS_POSITIONAL
+            )
+            return _phrase_prefix_score_shard(pt, dt, **kwargs)
 
-        rows = (
-            _one_task_per_shard(spark, sorted(shards))
-            .mapInPandas(score_shards, "doc_id long, g double, class_df long")
-            .collect()
-        )
+        rows = _scatter(
+            self.spark, shards, kernel, "doc_id long, g double, class_df long"
+        ).collect()
         df_class = sum(int(r["class_df"]) for r in rows if r["doc_id"] == -1)
         if df_class == 0:
-            return empty
+            return _hits(self.spark)
         idf = sum(
             math.log1p((self.n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5)) for t in firsts
         ) + math.log1p((self.n_docs - df_class + 0.5) / (df_class + 0.5))
-        hits = [r for r in rows if r["doc_id"] >= 0]
-        hits.sort(key=lambda r: (-r["g"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(idf * r["g"])) for r in hits[:k]],
-            "doc_id long, score double",
-        )
+        hits = [(r["doc_id"], idf * r["g"]) for r in rows if r["doc_id"] >= 0]
+        return _hits(self.spark, _topk(hits, k))
 
     def search_phrase_local(
         self,
@@ -1757,53 +1743,14 @@ class IndexSearcher:
         doc_filter: tuple | None = None,
         slop: int = 0,
     ) -> pd.DataFrame:
-        """In-process ``match_phrase`` (no Spark job): the phrase analog of
-        :meth:`search_local`, rank-identical to :meth:`search_phrase`."""
-        import math
-
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-        if not self.manifest.get("positions"):
-            raise ValueError(
-                "index stores freqs only — build with store_positions=True for phrase queries"
-            )
-        q_terms = tokenize(phrase)
-        if not q_terms:
-            return empty
-        terms = sorted(set(q_terms))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        if any(t not in dfreq for t in terms):
-            return empty
-        shards: set[int] = set(term_shards[terms[0]])
-        for t in terms[1:]:
-            shards &= term_shards[t]
-        if not shards:
-            return empty
-        idf = sum(
-            math.log1p((self.n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5)) for t in q_terms
-        )
-        kwargs = dict(
-            q_terms=q_terms,
-            idf=idf,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            slop=int(slop),
-        )
-        parts = []
-        for shard in sorted(shards):
-            pt, dt = _read_shard_tables(
-                self.index_dir, shard, terms, doc_filter, cols=POST_COLS_POSITIONAL
-            )
-            parts.append(_phrase_score_shard(pt, dt, **kwargs))
-        merged = pd.concat(parts, ignore_index=True) if parts else empty
-        merged = merged.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).head(k)
-        merged["score"] = merged["score"].map(round_half_up6)
-        return merged.reset_index(drop=True)
+        """In-process ``match_phrase`` (no Spark job): the plan, kernel and
+        gather of :meth:`search_phrase`, run one shard at a time on the
+        calling thread — the phrase analog of :meth:`search_local`."""
+        plan = self._phrase_plan(phrase, k, doc_filter, slop)
+        if plan is None:
+            return _local_topk([], k)
+        shards, kernel = plan
+        return _local_topk([kernel(s) for s in shards], k)
 
     def search_many(
         self,
@@ -1816,8 +1763,8 @@ class IndexSearcher:
         job — (query_id, doc_id, score), rank-identical per query to
         :meth:`search`. ``mode`` may be ``"or"``, ``"and"``, or ``"phrase"``
         (rank-identical to :meth:`search_phrase`; requires a positional
-        index; phrase queries route only to shards holding ALL phrase
-        terms).
+        index). Each query routes to the shards :meth:`_active_shards`
+        gives it, from one metadata read for the whole batch.
 
         This is the serving shape for query *throughput* at scale: per-query
         ``search`` pays one Spark job (task launch dominates the ~ms NumPy
@@ -1829,10 +1776,8 @@ class IndexSearcher:
         """
         import math
 
-        spark = self.spark
         out_schema = "query_id string, doc_id long, score double"
-        parsed: dict[str, tuple[list[str], str]] = {}
-        all_terms: set[str] = set()
+        parsed: dict[str, tuple[list[str], str, int | None]] = {}
         for qid, spec_t in queries.items():
             query, mode, *rest = spec_t  # optional 3rd element: min_should_match
             q_msm = int(rest[0]) if rest and rest[0] is not None else None
@@ -1844,54 +1789,34 @@ class IndexSearcher:
                     "index stores freqs only — build with store_positions=True for phrase queries"
                 )
             parsed[qid] = (q_terms, mode, q_msm)
-            all_terms.update(q_terms)
         if not parsed:
-            return spark.createDataFrame([], out_schema)
-        dfreq, term_shards = self._query_meta_terms(sorted(all_terms))
+            return self.spark.createDataFrame([], out_schema)
+        meta = self._query_meta(sorted({t for q, _, _ in parsed.values() for t in q}))
 
-        # per-query spec + shard routing: or/and queries hit shards holding
-        # at least one present term (same activation rule as search); phrase
-        # queries need every term co-present, so they route to the shard
-        # INTERSECTION (same rule as search_phrase)
         specs: dict[str, dict[str, Any]] = {}
         shard_qids: dict[int, list[str]] = {}
         for qid, (q_terms, mode, q_msm) in sorted(parsed.items()):
             weights = {t: float(c) for t, c in Counter(q_terms).items()}
-            present = sorted(t for t in weights if t in dfreq)
-            if not present or (mode in ("and", "phrase") and len(present) < len(weights)):
+            dfreq, present, shards = self._active_shards(sorted(weights), mode, meta)
+            if not shards or (q_msm is not None and len(present) < q_msm):
                 continue
-            if q_msm is not None and len(present) < q_msm:
-                continue
+            specs[qid] = {"mode": mode, "present": present}
             if mode == "phrase":
-                shards = set(term_shards[present[0]])
-                for t in present[1:]:
-                    shards &= term_shards[t]
-                if not shards:
-                    continue
-                specs[qid] = {
-                    "mode": mode,
-                    "present": present,
-                    "q_terms": q_terms,
-                    "idf": sum(
+                specs[qid].update(
+                    q_terms=q_terms,
+                    idf=sum(
                         math.log1p((self.n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
                         for t in q_terms
                     ),
-                }
+                )
             else:
-                shards = set()
-                for t in present:
-                    shards |= term_shards[t]
-                specs[qid] = {
-                    "weights": weights,
-                    "dfreq": {t: dfreq[t] for t in present},
-                    "present": present,
-                    "mode": mode,
-                    "msm": q_msm,
-                }
+                specs[qid].update(
+                    weights=weights, dfreq={t: dfreq[t] for t in present}, msm=q_msm
+                )
             for s in shards:
                 shard_qids.setdefault(s, []).append(qid)
         if not specs:
-            return spark.createDataFrame([], out_schema)
+            return self.spark.createDataFrame([], out_schema)
         shard_terms = {
             s: sorted({t for qid in qids for t in specs[qid]["present"]})
             for s, qids in shard_qids.items()
@@ -1905,64 +1830,45 @@ class IndexSearcher:
             )
             for s, qids in shard_qids.items()
         }
-
         index_dir = self.index_dir
-        base = dict(
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            pruned=pruned,
-        )
-        avgdl, id_space, n_shards = self.avgdl, self.id_space, self.n_shards
+        geom = dict(avgdl=self.avgdl, id_space=self.id_space, n_shards=self.n_shards, k=k)
+        n_docs = self.n_docs
 
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, shard_terms[shard], doc_filter, cols=shard_cols[shard]
+        def kernel(shard: int) -> pd.DataFrame | None:
+            pt, dt = _read_shard_tables(
+                index_dir, shard, shard_terms[shard], doc_filter, cols=shard_cols[shard]
+            )
+            parts = []
+            for qid in shard_qids[shard]:
+                spec = specs[qid]
+                q_pt = pt[pt["term"].isin(spec["present"])]
+                if spec["mode"] == "phrase":
+                    res = _phrase_score_shard(
+                        q_pt, dt, q_terms=spec["q_terms"], idf=spec["idf"], **geom
                     )
-                    for qid in shard_qids[shard]:
-                        spec = specs[qid]
-                        if spec["mode"] == "phrase":
-                            res = _phrase_score_shard(
-                                pt[pt["term"].isin(spec["present"])],
-                                dt,
-                                q_terms=spec["q_terms"],
-                                idf=spec["idf"],
-                                avgdl=avgdl,
-                                id_space=id_space,
-                                n_shards=n_shards,
-                                k=k,
-                            )
-                        else:
-                            res = _score_shard(
-                                pt[pt["term"].isin(spec["present"])],
-                                dt,
-                                weights=spec["weights"],
-                                dfreq=spec["dfreq"],
-                                mode=spec["mode"],
-                                msm=spec["msm"],
-                                **base,
-                            )
-                        if len(res):
-                            res.insert(0, "query_id", qid)
-                            yield res
+                else:
+                    res = _score_shard(
+                        q_pt, dt, weights=spec["weights"], dfreq=spec["dfreq"],
+                        mode=spec["mode"], msm=spec["msm"], n_docs=n_docs,
+                        pruned=pruned, **geom,
+                    )
+                if len(res):
+                    res.insert(0, "query_id", qid)
+                    parts.append(res)
+            return pd.concat(parts, ignore_index=True) if parts else None
 
-        active = sorted(shard_qids)
-        rows = _one_task_per_shard(spark, active).mapInPandas(score_shards, out_schema).collect()
-        # single-pass gather: group once, then one O(m log m) sort per query —
-        # the driver coordinator must stay O(total rows), not O(queries x rows)
+        rows = _scatter(self.spark, sorted(shard_qids), kernel, out_schema).collect()
+        # single-pass gather: group once, then one _topk per query — the
+        # driver coordinator must stay O(total rows), not O(queries x rows)
         by_qid: dict[str, list] = {}
-        for r in rows:
-            by_qid.setdefault(r[0], []).append(r)
-        merged: list[tuple[str, int, float]] = []
-        for qid in sorted(specs):
-            qrows = by_qid.get(qid, [])
-            qrows.sort(key=lambda r: (-r[2], r[1]))
-            merged.extend((qid, int(r[1]), round_half_up6(r[2])) for r in qrows[:k])
-        return spark.createDataFrame(merged, out_schema)
+        for qid, doc_id, score in rows:
+            by_qid.setdefault(qid, []).append((doc_id, score))
+        merged = pd.DataFrame(
+            [(qid, d, s) for qid in sorted(specs) for d, s in _topk(by_qid.get(qid, []), k)],
+            columns=["query_id", "doc_id", "score"],
+        ).astype({"doc_id": "int64", "score": "float64"})
+        # built through Arrow: a local relation, so no second job to collect
+        return self.spark.createDataFrame(merged, out_schema)
 
     def expand_terms(
         self,
@@ -2026,10 +1932,8 @@ class IndexSearcher:
         if rewrite is None:
             rewrite = "scoring_boolean" if kind == "fuzzy" else "constant_score"
         terms = self.expand_terms(pattern, kind, fuzziness, prefix_length, max_expansions)
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
         if not terms:
-            return empty
+            return _hits(self.spark)
         if rewrite == "scoring_boolean":
             return self.search(
                 " ".join(terms),
@@ -2038,17 +1942,13 @@ class IndexSearcher:
             )
         if rewrite != "constant_score":
             raise ValueError(f"unknown rewrite {rewrite!r}")
-        dfreq, active_shards = self._query_meta(terms)
-        present = [t for t in terms if t in dfreq]
+        _, present, shards = self._active_shards(terms)
         got: set[int] = set()
-        for shard in active_shards:  # ascending == ascending doc-id ranges
-            got |= self._matching_ids_shard(shard, present)
+        for shard in shards:  # ascending == ascending doc-id ranges
+            got.update(_facet_match_ids(self.index_dir, shard, present, "or").tolist())
             if len(got) >= k:
                 break
-        ids = sorted(got)[:k]
-        return spark.createDataFrame(
-            [(int(i), round(float(boost), 6)) for i in ids], "doc_id long, score double"
-        )
+        return _hits(self.spark, [(int(i), round(float(boost), 6)) for i in sorted(got)[:k]])
 
     def suggest(
         self,
@@ -2187,7 +2087,7 @@ class IndexSearcher:
                 self.expand_terms(t, "fuzzy", fuzziness, prefix_length, max_expansions=None)
             )
         if not expanded:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _hits(self.spark)
         return self.search(" ".join(sorted(expanded)), k=k)
 
     def more_like_this(
@@ -2218,13 +2118,13 @@ class IndexSearcher:
         )
         src_tf = Counter(tokenize(like_text))
         cand = sorted(t for t, c in src_tf.items() if c >= kwargs["min_term_freq"])
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not cand:
-            return empty
-        dfreq = self.term_stats(cand)
-        sel = mlt.select_mlt_terms(src_tf, dfreq, self.n_docs, **kwargs)
+        sel = (
+            mlt.select_mlt_terms(src_tf, self.term_stats(cand), self.n_docs, **kwargs)
+            if cand
+            else []
+        )
         if not sel:
-            return empty
+            return _hits(self.spark)
         doc_filter = ("doc_id", "!=", int(exclude_id)) if exclude_id is not None else None
         return self.search(" ".join(sel), k=k, doc_filter=doc_filter)
 
@@ -2234,24 +2134,15 @@ class IndexSearcher:
         never read, nothing scored). The distributed match-set primitive
         behind ``_delete_by_query``; unlike :meth:`count` the ids themselves
         are returned, so callers can count/collect/join without re-decoding."""
-        terms = sorted(set(tokenize(query)))
-        empty = self.spark.createDataFrame([], "doc_id long")
-        if not terms:
-            return empty
-        dfreq, active_shards = self._query_meta(terms)
-        present = [t for t in terms if t in dfreq]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            return empty
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         index_dir = self.index_dir
-
-        def shard_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    yield pd.DataFrame({"doc_id": ids.astype("int64")})
-
-        return _one_task_per_shard(self.spark, active_shards).mapInPandas(
-            shard_ids, "doc_id long"
+        return _scatter(
+            self.spark,
+            shards,
+            lambda shard: pd.DataFrame(
+                {"doc_id": _facet_match_ids(index_dir, shard, present, mode).astype("int64")}
+            ),
+            "doc_id long",
         )
 
     def search_script_sorted(
@@ -2326,27 +2217,16 @@ class IndexSearcher:
         across parallelism/cluster size by construction."""
         if page_size <= 0:
             raise ValueError("page_size must be positive")
-        empty = self.spark.createDataFrame([], "page long, doc_id long")
-        terms = sorted(set(tokenize(query)))
-        if not terms:
-            return empty
-        dfreq, active_shards = self._query_meta(terms)
-        present = [t for t in terms if t in dfreq]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            return empty
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         index_dir = self.index_dir
 
-        def count_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    n = len(_facet_match_ids(index_dir, shard, present, mode))
-                    yield pd.DataFrame({"shard": [shard], "n": [n]})
+        def count_shard(shard: int) -> pd.DataFrame:
+            n = len(_facet_match_ids(index_dir, shard, present, mode))
+            return pd.DataFrame({"shard": [shard], "n": [n]})
 
         counts = {
             int(r["shard"]): int(r["n"])
-            for r in _one_task_per_shard(self.spark, active_shards)
-            .mapInPandas(count_shards, "shard int, n long")
-            .collect()
+            for r in _scatter(self.spark, shards, count_shard, "shard int, n long").collect()
         }
         offsets: dict[int, int] = {}
         acc = 0
@@ -2355,18 +2235,14 @@ class IndexSearcher:
             acc += counts[sh]
         psize = int(page_size)
 
-        def emit_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    ranks = offsets[shard] + np.arange(len(ids), dtype=np.int64)
-                    yield pd.DataFrame({"page": ranks // psize, "doc_id": ids})
+        def emit_pages(shard: int) -> pd.DataFrame | None:
+            ids = _facet_match_ids(index_dir, shard, present, mode)
+            if len(ids) == 0:
+                return None
+            ranks = offsets[shard] + np.arange(len(ids), dtype=np.int64)
+            return pd.DataFrame({"page": ranks // psize, "doc_id": ids})
 
-        return _one_task_per_shard(self.spark, sorted(counts)).mapInPandas(
-            emit_pages, "page long, doc_id long"
-        )
+        return _scatter(self.spark, sorted(counts), emit_pages, "page long, doc_id long")
 
     def mget(self, ids: list[int], columns: list[str] | None = None) -> DataFrame:
         """ES ``_mget`` on the SERVING path: stored fields for the given ids
@@ -2573,32 +2449,21 @@ class IndexSearcher:
         the wire. OR of a single term short-circuits to the dictionary's
         precomputed df (no postings read at all). Returns one row
         ``(n_matching)``, matching :func:`~..operators.topk.match_count`."""
-        terms = sorted(set(tokenize(query)))
-        out_one = lambda n: self.spark.createDataFrame(  # noqa: E731
-            [(int(n),)], "n_matching long"
-        )
-        if not terms:
-            return out_one(0)
-        dfreq, active_shards = self._query_meta(terms)
-        present = [t for t in terms if t in dfreq]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            return out_one(0)
+        dfreq, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         if mode == "or" and len(present) == 1:
-            return out_one(dfreq[present[0]])
-        index_dir = self.index_dir
-
-        def count_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    n = len(_facet_match_ids(index_dir, shard, present, mode))
-                    yield pd.DataFrame({"n": [n]})
-
-        rows = (
-            _one_task_per_shard(self.spark, active_shards)
-            .mapInPandas(count_shards, "n long")
-            .collect()
-        )
-        return out_one(sum(r["n"] for r in rows))
+            n = dfreq[present[0]]
+        else:
+            index_dir = self.index_dir
+            rows = _scatter(
+                self.spark,
+                shards,
+                lambda shard: pd.DataFrame(
+                    {"n": [len(_facet_match_ids(index_dir, shard, present, mode))]}
+                ),
+                "n long",
+            ).collect()
+            n = sum(r["n"] for r in rows)
+        return self.spark.createDataFrame([(int(n),)], "n_matching long")
 
     def count_terminated(
         self, query: str, terminate_after: int, mode: str = "or"
@@ -2616,32 +2481,18 @@ class IndexSearcher:
         one row ``(n_matching, terminated_early)``."""
         if terminate_after < 1:
             raise ValueError(f"terminate_after must be >= 1, got {terminate_after}")
-        terms = sorted(set(tokenize(query)))
-        out_one = lambda n, t: self.spark.createDataFrame(  # noqa: E731
-            [(int(n), int(t))], "n_matching long, terminated_early int"
-        )
-        if not terms:
-            return out_one(0, 0)
-        dfreq, active_shards = self._query_meta(terms)
-        present = [t for t in terms if t in dfreq]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            return out_one(0, 0)
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         index_dir, cap = self.index_dir, int(terminate_after)
 
-        def count_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    m = len(_facet_match_ids(index_dir, shard, present, mode))
-                    yield pd.DataFrame(
-                        {"n": [min(m, cap)], "t": [int(m >= cap)]}
-                    )
+        def count_shard(shard: int) -> pd.DataFrame:
+            m = len(_facet_match_ids(index_dir, shard, present, mode))
+            return pd.DataFrame({"n": [min(m, cap)], "t": [int(m >= cap)]})
 
-        rows = (
-            _one_task_per_shard(self.spark, active_shards)
-            .mapInPandas(count_shards, "n long, t int")
-            .collect()
+        rows = _scatter(self.spark, shards, count_shard, "n long, t int").collect()
+        return self.spark.createDataFrame(
+            [(sum(r["n"] for r in rows), max((r["t"] for r in rows), default=0))],
+            "n_matching long, terminated_early int",
         )
-        return out_one(sum(r["n"] for r in rows), max((r["t"] for r in rows), default=0))
 
     def facet_query_count(
         self,
@@ -2662,50 +2513,19 @@ class IndexSearcher:
         if query is None:
             n = self.count(facet_query, mode=facet_mode).collect()[0][0]
             return out_one(n)
-        tq = sorted(set(tokenize(query)))
-        tf_ = sorted(set(tokenize(facet_query)))
-        if not tq or not tf_:
-            return out_one(0)
-        dfreq, term_shards = self._query_meta_terms(sorted(set(tq + tf_)))
-
-        def active(terms: list[str], m: str) -> set[int]:
-            present = [t for t in terms if t in dfreq]
-            if not present or (m == "and" and len(present) < len(terms)):
-                return set()
-            sets = [term_shards[t] for t in present]
-            return set.intersection(*sets) if m == "and" else set.union(*sets)
-
-        shards = sorted(active(tq, mode) & active(tf_, facet_mode))
-        if not shards:
-            return out_one(0)
+        tq, tf_ = sorted(set(tokenize(query))), sorted(set(tokenize(facet_query)))
+        meta = self._query_meta(sorted(set(tq + tf_))) if tq and tf_ else ({}, {})
+        _, pq, sq = self._active_shards(tq, mode, meta)
+        _, pf, sf = self._active_shards(tf_, facet_mode, meta)
         index_dir = self.index_dir
-        pq = [t for t in tq if t in dfreq]
-        pf = [t for t in tf_ if t in dfreq]
 
-        def count_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    a = _facet_match_ids(index_dir, shard, pq, mode)
-                    b = _facet_match_ids(index_dir, shard, pf, facet_mode)
-                    yield pd.DataFrame(
-                        {"n": [len(np.intersect1d(a, b, assume_unique=True))]}
-                    )
+        def count_shard(shard: int) -> pd.DataFrame:
+            a = _facet_match_ids(index_dir, shard, pq, mode)
+            b = _facet_match_ids(index_dir, shard, pf, facet_mode)
+            return pd.DataFrame({"n": [len(np.intersect1d(a, b, assume_unique=True))]})
 
-        rows = (
-            _one_task_per_shard(self.spark, shards)
-            .mapInPandas(count_shards, "n long")
-            .collect()
-        )
+        rows = _scatter(self.spark, sorted(set(sq) & set(sf)), count_shard, "n long").collect()
         return out_one(sum(r["n"] for r in rows))
-
-    def _matching_ids_shard(self, shard: int, terms: list[str]) -> set[int]:
-        """All doc ids in one shard matching any of ``terms`` (postings
-        doc-stream decode only; tf streams never touched)."""
-        pt = _read_postings_docstream(self.index_dir, shard, terms)
-        ids: set[int] = set()
-        for row in pt.itertuples(index=False):
-            ids.update(_decode_posting_doc_ids(row).tolist())
-        return ids
 
     def facet(
         self,
@@ -2797,130 +2617,89 @@ class IndexSearcher:
             docs = spark.read.parquet(f"{index_dir}/docs")
             partials = None
         else:
-            terms = sorted(set(tokenize(query)))
-            dfreq, term_shards = self._query_meta_terms(terms)
-            present = [t for t in terms if t in dfreq]
-            shard_sets = [term_shards[t] for t in present]
-            if mode == "and":
-                active = sorted(set.intersection(*shard_sets)) if (
-                    shard_sets and len(present) == len(terms)
-                ) else []
-            else:
-                active = sorted(set.union(*shard_sets)) if shard_sets else []
+            _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
             ival = int(interval) if interval else 0
-
-            def shard_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    for shard in pdf["shard"].tolist():
-                        ids = _facet_match_ids(index_dir, shard, present, mode)
-                        if len(ids) == 0:
-                            continue
-                        if kind == "filters":
-                            cols = ["doc_id"] + sorted(
-                                set().union(
-                                    *[_triple_fields(trs) for trs in filters.values()]
-                                )
-                            )
-                        else:
-                            cols = ["doc_id", field] + (
-                                [value_field] if kind == "terms_stats" else []
-                            )
-                        dt = (
-                            pads.dataset(
-                                f"{index_dir}/docs/shard={shard}", format="parquet"
-                            )
-                            .to_table(columns=cols)
-                            .to_pandas()
-                        )
-                        sel = np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                        if kind == "filters":
-                            sub = dt.loc[sel]
-                            yield pd.DataFrame(
-                                {
-                                    "idx": range(len(filter_names)),
-                                    "count": [
-                                        int(_pd_filter_mask(sub, filters[n]).sum())
-                                        for n in filter_names
-                                    ],
-                                }
-                            )
-                            continue
-                        if kind == "terms_stats":
-                            sub = dt.loc[sel, [field, value_field]]
-                            g = sub.groupby(field)[value_field].agg(
-                                ["count", "min", "max", "sum"]
-                            )
-                            yield pd.DataFrame(
-                                {
-                                    "term": g.index,
-                                    "count": g["count"].to_numpy(),
-                                    "mn": g["min"].astype(float).to_numpy(),
-                                    "mx": g["max"].astype(float).to_numpy(),
-                                    "sm": g["sum"].astype(float).to_numpy(),
-                                }
-                            )
-                            continue
-                        vals = dt.loc[sel, field]
-                        if kind == "terms":
-                            vc = vals.value_counts()
-                            yield pd.DataFrame(
-                                {"value": vc.index, "count": vc.to_numpy()}
-                            )
-                        elif kind == "histogram":
-                            b = (
-                                np.floor(vals.to_numpy() / ival).astype(np.int64) * ival
-                            )
-                            bu, bc = np.unique(b, return_counts=True)
-                            yield pd.DataFrame({"bucket": bu, "count": bc})
-                        elif kind == "range":
-                            v = vals.astype(float)
-                            counts = []
-                            for _, lo, hi in norm_ranges:
-                                m = v.notna()
-                                if lo is not None:
-                                    m &= v >= float(lo)
-                                if hi is not None:
-                                    m &= v < float(hi)
-                                counts.append(int(m.sum()))
-                            yield pd.DataFrame(
-                                {"idx": range(len(norm_ranges)), "count": counts}
-                            )
-                        elif kind == "cardinality":
-                            yield pd.DataFrame({"value": vals.dropna().unique()})
-                        elif kind == "missing":
-                            yield pd.DataFrame({"count": [int(vals.isna().sum())]})
-                        elif kind == "value_count":
-                            yield pd.DataFrame({"count": [int(vals.notna().sum())]})
-                        elif kind == "extended_stats":
-                            nn = vals.dropna()
-                            if len(nn) == 0:
-                                continue
-                            fv = nn.astype(float).to_numpy()
-                            yield pd.DataFrame(
-                                {
-                                    "cnt": [len(nn)],
-                                    "mn": [nn.min()],
-                                    "mx": [nn.max()],
-                                    "sm": [float(fv.sum())],
-                                    "sos": [float((fv * fv).sum())],
-                                }
-                            )
-                        else:
-                            yield pd.DataFrame(
-                                {
-                                    "cnt": [len(vals)],
-                                    "mn": [vals.min()],
-                                    "mx": [vals.max()],
-                                    "sm": [float(vals.sum())],
-                                }
-                            )
-
-            if active:
-                partials = _one_task_per_shard(spark, active).mapInPandas(
-                    shard_partials, partial_schema
+            if kind == "filters":
+                cols = ["doc_id"] + sorted(
+                    {f for trs in filters.values() for f in _triple_fields(trs)}
                 )
             else:
-                partials = spark.createDataFrame([], partial_schema)
+                cols = ["doc_id", field] + ([value_field] if kind == "terms_stats" else [])
+
+            def shard_partial(shard: int) -> pd.DataFrame | None:
+                sub = _matched_docs(index_dir, shard, present, mode, cols)
+                if sub is None:
+                    return None
+                if kind == "filters":
+                    return pd.DataFrame(
+                        {
+                            "idx": range(len(filter_names)),
+                            "count": [
+                                int(_pd_filter_mask(sub, filters[n]).sum())
+                                for n in filter_names
+                            ],
+                        }
+                    )
+                if kind == "terms_stats":
+                    g = sub.groupby(field)[value_field].agg(["count", "min", "max", "sum"])
+                    return pd.DataFrame(
+                        {
+                            "term": g.index,
+                            "count": g["count"].to_numpy(),
+                            "mn": g["min"].astype(float).to_numpy(),
+                            "mx": g["max"].astype(float).to_numpy(),
+                            "sm": g["sum"].astype(float).to_numpy(),
+                        }
+                    )
+                vals = sub[field]
+                if kind == "terms":
+                    vc = vals.value_counts()
+                    return pd.DataFrame({"value": vc.index, "count": vc.to_numpy()})
+                if kind == "histogram":
+                    b = np.floor(vals.to_numpy() / ival).astype(np.int64) * ival
+                    bu, bc = np.unique(b, return_counts=True)
+                    return pd.DataFrame({"bucket": bu, "count": bc})
+                if kind == "range":
+                    v = vals.astype(float)
+                    counts = []
+                    for _, lo, hi in norm_ranges:
+                        m = v.notna()
+                        if lo is not None:
+                            m &= v >= float(lo)
+                        if hi is not None:
+                            m &= v < float(hi)
+                        counts.append(int(m.sum()))
+                    return pd.DataFrame({"idx": range(len(norm_ranges)), "count": counts})
+                if kind == "cardinality":
+                    return pd.DataFrame({"value": vals.dropna().unique()})
+                if kind == "missing":
+                    return pd.DataFrame({"count": [int(vals.isna().sum())]})
+                if kind == "value_count":
+                    return pd.DataFrame({"count": [int(vals.notna().sum())]})
+                if kind == "extended_stats":
+                    nn = vals.dropna()
+                    if len(nn) == 0:
+                        return None
+                    fv = nn.astype(float).to_numpy()
+                    return pd.DataFrame(
+                        {
+                            "cnt": [len(nn)],
+                            "mn": [nn.min()],
+                            "mx": [nn.max()],
+                            "sm": [float(fv.sum())],
+                            "sos": [float((fv * fv).sum())],
+                        }
+                    )
+                return pd.DataFrame(
+                    {
+                        "cnt": [len(vals)],
+                        "mn": [vals.min()],
+                        "mx": [vals.max()],
+                        "sm": [float(vals.sum())],
+                    }
+                )
+
+            partials = _scatter(spark, shards, shard_partial, partial_schema)
 
         if kind == "range":
             keys = [k for k, _, _ in norm_ranges]
@@ -3111,39 +2890,13 @@ class IndexSearcher:
 
             docs = spark.read.parquet(f"{index_dir}/docs")
             return percentiles_facet(docs, None, field, percents=tuple(ps))
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
 
-        def shard_values(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    dt = (
-                        pads.dataset(
-                            f"{index_dir}/docs/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id", field])
-                        .to_pandas()
-                    )
-                    sel = np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                    yield pd.DataFrame({"v": dt.loc[sel, field].astype(float)})
+        def shard_values(shard: int) -> pd.DataFrame | None:
+            sub = _matched_docs(index_dir, shard, present, mode, ["doc_id", field])
+            return None if sub is None else pd.DataFrame({"v": sub[field].astype(float)})
 
-        if active:
-            partials = _one_task_per_shard(spark, active).mapInPandas(
-                shard_values, "v double"
-            )
-        else:
-            partials = spark.createDataFrame([], "v double")
+        partials = _scatter(spark, shards, shard_values, "v double")
         fracs = F.array(*[F.lit(p / 100.0) for p in ps])
         plits = F.array(*[F.lit(p) for p in ps])
         return (
@@ -3190,59 +2943,29 @@ class IndexSearcher:
         missing = [f for f in fields if f not in doc_schema]
         if missing:
             raise ValueError(f"script references unknown doc fields {missing}")
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         src = sc.source
 
-        def shard_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..functions.scripts import parse_script as _ps
-
-            sc_l = _ps(src)
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    dt = (
-                        pads.dataset(
-                            f"{index_dir}/docs/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id"] + fields)
-                        .to_pandas()
-                    )
-                    sel = np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                    env = {
-                        f: dt.loc[sel, f].astype(float).to_numpy() for f in fields
-                    }
-                    v = np.asarray(
-                        sc_l.numpy_vals(env), dtype=np.float64
-                    )
-                    if v.ndim == 0:  # field-free script: constant per doc
-                        v = np.full(int(sel.sum()), float(v))
-                    yield pd.DataFrame(
-                        {
-                            "cnt": [len(v)],
-                            "mn": [float(v.min())],
-                            "mx": [float(v.max())],
-                            "sm": [float(v.sum())],
-                        }
-                    )
-
-        schema = "cnt long, mn double, mx double, sm double"
-        if active:
-            partials = _one_task_per_shard(spark, active).mapInPandas(
-                shard_stats, schema
+        def shard_stats(shard: int) -> pd.DataFrame | None:
+            sub = _matched_docs(index_dir, shard, present, mode, ["doc_id"] + fields)
+            if sub is None:
+                return None
+            env = {f: sub[f].astype(float).to_numpy() for f in fields}
+            v = np.asarray(parse_script(src).numpy_vals(env), dtype=np.float64)
+            if v.ndim == 0:  # field-free script: constant per doc
+                v = np.full(len(sub), float(v))
+            return pd.DataFrame(
+                {
+                    "cnt": [len(v)],
+                    "mn": [float(v.min())],
+                    "mx": [float(v.max())],
+                    "sm": [float(v.sum())],
+                }
             )
-        else:
-            partials = spark.createDataFrame([], schema)
+
+        partials = _scatter(
+            spark, shards, shard_stats, "cnt long, mn double, mx double, sm double"
+        )
         out = {
             "min": F.min("mn"),
             "max": F.max("mx"),
@@ -3275,47 +2998,21 @@ class IndexSearcher:
 
             docs = spark.read.parquet(f"{index_dir}/docs")
             return percentile_ranks_facet(docs, None, field, tuple(vs))
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         nv = len(vs)
         schema = "n long, " + ", ".join(f"c{i} long" for i in range(nv))
 
-        def shard_counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    dt = (
-                        pads.dataset(
-                            f"{index_dir}/docs/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id", field])
-                        .to_pandas()
-                    )
-                    sel = np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                    v = dt.loc[sel, field].dropna().astype(float).to_numpy()
-                    if len(v) == 0:
-                        continue
-                    row = {"n": [len(v)]}
-                    for i, probe in enumerate(vs):
-                        row[f"c{i}"] = [int((v <= probe).sum())]
-                    yield pd.DataFrame(row)
+        def shard_counts(shard: int) -> pd.DataFrame | None:
+            sub = _matched_docs(index_dir, shard, present, mode, ["doc_id", field])
+            v = np.empty(0) if sub is None else sub[field].dropna().astype(float).to_numpy()
+            if len(v) == 0:
+                return None
+            row = {"n": [len(v)]}
+            for i, probe in enumerate(vs):
+                row[f"c{i}"] = [int((v <= probe).sum())]
+            return pd.DataFrame(row)
 
-        if active:
-            partials = _one_task_per_shard(spark, active).mapInPandas(
-                shard_counts, schema
-            )
-        else:
-            partials = spark.createDataFrame([], schema)
+        partials = _scatter(spark, shards, shard_counts, schema)
         merged = partials.agg(
             F.sum("n").alias("n"),
             *[F.sum(f"c{i}").alias(f"c{i}") for i in range(nv)],
@@ -3362,54 +3059,35 @@ class IndexSearcher:
             docs = spark.read.parquet(f"{index_dir}/docs")
             return top_hits_agg(docs, None, group_field, k, sort_field,
                                 ascending=ascending)
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         kk, asc = int(k), bool(ascending)
 
-        def shard_winners(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    dt = (
-                        pads.dataset(
-                            f"{index_dir}/docs/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id", group_field, sort_field])
-                        .to_pandas()
-                    )
-                    sel = np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                    sub = dt.loc[sel].sort_values(
-                        [sort_field, "doc_id"], ascending=[asc, True]
-                    )
-                    top = sub.groupby(group_field, sort=False).head(kk)
-                    yield pd.DataFrame(
-                        {
-                            "key": top[group_field],
-                            "doc_id": top["doc_id"].astype("int64"),
-                            "sv": top[sort_field].astype(float),
-                        }
-                    )
+        def shard_winners(shard: int) -> pd.DataFrame | None:
+            sub = _matched_docs(
+                index_dir, shard, present, mode, ["doc_id", group_field, sort_field]
+            )
+            if sub is None:
+                return None
+            top = (
+                sub.sort_values([sort_field, "doc_id"], ascending=[asc, True])
+                .groupby(group_field, sort=False)
+                .head(kk)
+            )
+            return pd.DataFrame(
+                {
+                    "key": top[group_field],
+                    "doc_id": top["doc_id"].astype("int64"),
+                    "sv": top[sort_field].astype(float),
+                }
+            )
 
         ddl = _arrow_ddl(
             pads.dataset(f"{index_dir}/docs/shard=0", format="parquet").schema,
             group_field,
         )
-        if active:
-            partials = _one_task_per_shard(spark, active).mapInPandas(
-                shard_winners, f"key {ddl}, doc_id long, sv double"
-            )
-        else:
-            partials = spark.createDataFrame([], f"key {ddl}, doc_id long, sv double")
+        partials = _scatter(
+            spark, shards, shard_winners, f"key {ddl}, doc_id long, sv double"
+        )
         sort = F.col("sv").asc() if asc else F.col("sv").desc()
         w = Window.partitionBy("key").orderBy(sort, F.col("doc_id").asc())
         return (
@@ -3442,52 +3120,31 @@ class IndexSearcher:
         if not query:
             raise ValueError("significant_terms needs a foreground query")
         spark, index_dir = self.spark, self.index_dir
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         empty = spark.createDataFrame(
             [], "term string, fg_count long, bg_count long, score double"
         )
-        if not active:
+        if not shards:
             return empty
 
-        def shard_fg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    pt = (
-                        pads.dataset(
-                            f"{index_dir}/postings/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["term", "n", "doc_bytes",
-                                           "block_first_doc"])
-                        .to_pandas()
-                    )
-                    out_t, out_f = [], []
-                    for row in pt.itertuples(index=False):
-                        fg = int(
-                            np.isin(
-                                _decode_posting_doc_ids(row), ids,
-                                assume_unique=True,
-                            ).sum()
-                        )
-                        if fg:
-                            out_t.append(row.term)
-                            out_f.append(fg)
-                    yield pd.DataFrame({"term": out_t, "fg": out_f})
+        def shard_fg(shard: int) -> pd.DataFrame | None:
+            ids = _facet_match_ids(index_dir, shard, present, mode)
+            if len(ids) == 0:
+                return None
+            pt = (
+                pads.dataset(f"{index_dir}/postings/shard={shard}", format="parquet")
+                .to_table(columns=["term", "n", "doc_bytes", "block_first_doc"])
+                .to_pandas()
+            )
+            out_t, out_f = [], []
+            for row in pt.itertuples(index=False):
+                fg = int(np.isin(_decode_posting_doc_ids(row), ids, assume_unique=True).sum())
+                if fg:
+                    out_t.append(row.term)
+                    out_f.append(fg)
+            return pd.DataFrame({"term": out_t, "fg": out_f})
 
-        partials = _one_task_per_shard(spark, active).mapInPandas(
-            shard_fg, "term string, fg long"
-        )
+        partials = _scatter(spark, shards, shard_fg, "term string, fg long")
         # the declarative twin collects the same two totals (docs.count());
         # here fg_total is the doc-stream-only count kernel (one long per
         # shard over the wire), so the postings-sweep partials run exactly
@@ -3568,42 +3225,19 @@ class IndexSearcher:
                 src = src.where(after_condition(sort_by, after))
             return src.orderBy(*order_cols).offset(int(from_)).limit(int(size))
 
-        terms = sorted(set(tokenize(query)))
-        dfreq, term_shards = self._query_meta_terms(terms)
-        present = [t for t in terms if t in dfreq]
-        shard_sets = [term_shards[t] for t in present]
-        if mode == "and":
-            active = sorted(set.intersection(*shard_sets)) if (
-                shard_sets and len(present) == len(terms)
-            ) else []
-        else:
-            active = sorted(set.union(*shard_sets)) if shard_sets else []
-        if not active:
+        _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
+        if not shards:
             return spark.createDataFrame([], ddl)
 
-        def shard_tops(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    ids = _facet_match_ids(index_dir, shard, present, mode)
-                    if len(ids) == 0:
-                        continue
-                    dt = (
-                        pads.dataset(
-                            f"{index_dir}/docs/shard={shard}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id"] + fields)
-                        .to_pandas()
-                    )
-                    sub = dt.loc[
-                        np.isin(dt["doc_id"].to_numpy(), ids, assume_unique=True)
-                    ]
-                    if after is not None:
-                        sub = sub.loc[after_mask_pandas(sub, sort_by, after)]
-                    yield sub.sort_values(
-                        fields + ["doc_id"], ascending=ascending + [True]
-                    ).head(want)
+        def shard_tops(shard: int) -> pd.DataFrame | None:
+            sub = _matched_docs(index_dir, shard, present, mode, ["doc_id"] + fields)
+            if sub is None:
+                return None
+            if after is not None:
+                sub = sub.loc[after_mask_pandas(sub, sort_by, after)]
+            return sub.sort_values(fields + ["doc_id"], ascending=ascending + [True]).head(want)
 
-        partials = _one_task_per_shard(spark, active).mapInPandas(shard_tops, ddl)
+        partials = _scatter(spark, shards, shard_tops, ddl)
         return partials.orderBy(*order_cols).offset(int(from_)).limit(int(size))
 
     def search_boosting(
@@ -3624,40 +3258,13 @@ class IndexSearcher:
         score-identical to operators/topk.bm25_boosting_topk."""
         if not 0.0 <= float(negative_boost) <= 1.0:
             raise ValueError("negative_boost must be in [0, 1]")
-        spark = self.spark
-        q_terms = tokenize(positive)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not q_terms:
-            return empty
-        neg_terms = sorted(set(tokenize(negative)))
-        weights = {t: float(c) for t, c in Counter(q_terms).items()}
-        dfreq, active_shards = self._query_meta(sorted(weights))
-        present = sorted(t for t in weights if t in dfreq)
-        if not present or (mode == "and" and len(present) < len(weights)):
-            return empty
-        kwargs = dict(
-            weights=weights,
-            dfreq=dfreq,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            mode=mode,
-            pruned=False,
-            fsv_spec={
-                "kind": "neg_boost",
-                "neg_terms": neg_terms,
-                "nb": float(negative_boost),
-                "index_dir": self.index_dir,
-            },
-        )
-        rows = self._scatter_direct(active_shards, present, kwargs).collect()
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+        fsv_spec = {
+            "kind": "neg_boost",
+            "neg_terms": sorted(set(tokenize(negative))),
+            "nb": float(negative_boost),
+            "index_dir": self.index_dir,
+        }
+        return self._rescored(positive, k, mode, None, fsv_spec=fsv_spec)
 
     def search_function_score(
         self,
@@ -3695,52 +3302,30 @@ class IndexSearcher:
         hash is a deterministic fixture device, not a serving feature)."""
         from ..operators.topk import FVF_MODIFIERS, _decay_params
 
+        doc_schema = pads.dataset(
+            f"{self.index_dir}/docs/shard=0", format="parquet"
+        ).schema
+
+        def need(cols: list[str], what: str) -> None:
+            missing_c = [c for c in cols if c not in doc_schema.names]
+            if missing_c:
+                raise ValueError(
+                    f"{what} {missing_c} are not stored docs columns of this "
+                    "index (pass them via orig_ids at build)"
+                )
+
         if script is not None:
             if field is not None or decay is not None or functions is not None:
                 raise ValueError("script_score excludes field/decay/functions")
             from ..functions.scripts import parse_script
 
-            sc = parse_script(script)
-            need_cols = sorted(sc.fields)
-            doc_schema = pads.dataset(
-                f"{self.index_dir}/docs/shard=0", format="parquet"
-            ).schema
-            missing_c = [c for c in need_cols if c not in doc_schema.names]
-            if missing_c:
-                raise ValueError(
-                    f"script doc fields {missing_c} are not stored docs "
-                    "columns of this index (pass them via orig_ids at build)"
-                )
-            spark = self.spark
-            q_terms = tokenize(query)
-            empty = spark.createDataFrame([], "doc_id long, score double")
-            if not q_terms:
-                return empty
-            weights = {t: float(c) for t, c in Counter(q_terms).items()}
-            dfreq, active_shards = self._query_meta(sorted(weights))
-            present = sorted(t for t in weights if t in dfreq)
-            if not present or (mode == "and" and len(present) < len(weights)):
-                return empty
-            kwargs = dict(
-                weights=weights,
-                dfreq=dfreq,
-                n_docs=self.n_docs,
-                avgdl=self.avgdl,
-                id_space=self.id_space,
-                n_shards=self.n_shards,
-                k=k,
-                mode=mode,
-                pruned=False,
-                fsv_spec={"kind": "script", "script": script},
+            need_cols = sorted(parse_script(script).fields)
+            need(need_cols, "script doc fields")
+            return self._rescored(
+                query, k, mode, need_cols, fsv_spec={"kind": "script", "script": script}
             )
-            rows = self._scatter_direct(
-                active_shards, present, kwargs, extra_doc_cols=need_cols
-            ).collect()
-            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            return spark.createDataFrame(
-                [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-                "doc_id long, score double",
-            )
+        if boost_mode not in ("multiply", "sum"):
+            raise ValueError(f"boost_mode must be multiply|sum, got {boost_mode!r}")
         if functions is not None:
             # ES weighted functions array: per-doc factor from the shard's
             # stored filter columns (_fsv_dense kind="functions"); every
@@ -3752,52 +3337,11 @@ class IndexSearcher:
                 raise ValueError(
                     f"score_mode {score_mode!r} (multiply|sum|max|first|min|avg)"
                 )
-            if boost_mode not in ("multiply", "sum"):
-                raise ValueError(f"boost_mode must be multiply|sum, got {boost_mode!r}")
             need_cols = sorted({f for t, _ in functions for f, _, _ in t})
-            doc_schema = pads.dataset(
-                f"{self.index_dir}/docs/shard=0", format="parquet"
-            ).schema
-            missing_c = [c for c in need_cols if c not in doc_schema.names]
-            if missing_c:
-                raise ValueError(
-                    f"functions filter fields {missing_c} are not stored docs "
-                    "columns of this index (pass them via orig_ids at build)"
-                )
-            spark = self.spark
-            q_terms = tokenize(query)
-            empty = spark.createDataFrame([], "doc_id long, score double")
-            if not q_terms:
-                return empty
-            weights = {t: float(c) for t, c in Counter(q_terms).items()}
-            dfreq, active_shards = self._query_meta(sorted(weights))
-            present = sorted(t for t in weights if t in dfreq)
-            if not present or (mode == "and" and len(present) < len(weights)):
-                return empty
-            kwargs = dict(
-                weights=weights,
-                dfreq=dfreq,
-                n_docs=self.n_docs,
-                avgdl=self.avgdl,
-                id_space=self.id_space,
-                n_shards=self.n_shards,
-                k=k,
-                mode=mode,
-                pruned=False,
-                fsv_spec={
-                    "kind": "functions",
-                    "functions": functions,
-                    "score_mode": score_mode,
-                },
-                boost_mode=boost_mode,
-            )
-            rows = self._scatter_direct(
-                active_shards, present, kwargs, extra_doc_cols=need_cols
-            ).collect()
-            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            return spark.createDataFrame(
-                [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-                "doc_id long, score double",
+            need(need_cols, "functions filter fields")
+            fsv_spec = {"kind": "functions", "functions": functions, "score_mode": score_mode}
+            return self._rescored(
+                query, k, mode, need_cols, fsv_spec=fsv_spec, boost_mode=boost_mode
             )
         if (field is None) == (decay is None):
             raise ValueError("exactly one of field/decay required")
@@ -3811,48 +3355,31 @@ class IndexSearcher:
                 "kind": "fvf", "value_col": field, "factor": float(factor),
                 "modifier": modifier, "missing": float(missing),
             }
-        if boost_mode not in ("multiply", "sum"):
-            raise ValueError(f"boost_mode must be multiply|sum, got {boost_mode!r}")
-        value_col = fsv_spec["value_col"]
-        doc_schema = pads.dataset(
-            f"{self.index_dir}/docs/shard=0", format="parquet"
-        ).schema
-        if value_col not in doc_schema.names:
-            raise ValueError(
-                f"function_score field {value_col!r} is not a stored docs "
-                "column of this index (pass it via orig_ids at build)"
-            )
-        spark = self.spark
-        q_terms = tokenize(query)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not q_terms:
-            return empty
-        weights = {t: float(c) for t, c in Counter(q_terms).items()}
-        dfreq, active_shards = self._query_meta(sorted(weights))
-        present = sorted(t for t in weights if t in dfreq)
-        if not present or (mode == "and" and len(present) < len(weights)):
-            return empty
-        kwargs = dict(
-            weights=weights,
-            dfreq=dfreq,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            id_space=self.id_space,
-            n_shards=self.n_shards,
-            k=k,
-            mode=mode,
-            pruned=False,
-            fsv_spec=fsv_spec,
+        need([fsv_spec["value_col"]], "function_score field")
+        return self._rescored(
+            query, k, mode, [fsv_spec["value_col"]], fsv_spec=fsv_spec,
             boost_mode=boost_mode,
         )
-        rows = self._scatter_direct(
-            active_shards, present, kwargs, extra_doc_cols=[value_col]
-        ).collect()
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-            "doc_id long, score double",
-        )
+
+    def _rescored(
+        self,
+        query: str,
+        k: int,
+        mode: str,
+        extra_doc_cols: list[str] | None,
+        **score_kw: Any,
+    ) -> DataFrame:
+        """The unpruned BM25 scatter behind :meth:`search_boosting` and
+        :meth:`search_function_score`: :meth:`search`'s plan with the
+        per-doc re-score (``fsv_spec``/``boost_mode`` of
+        :func:`_score_shard`) and its extra stored docs columns."""
+        plan = self._bm25_plan(query, k, mode, False, None, None)
+        if plan is None:
+            return _hits(self.spark)
+        shards, args = plan
+        args["kwargs"].update(score_kw)
+        rows = self._scatter_direct(shards, **args, extra_doc_cols=extra_doc_cols).collect()
+        return _hits(self.spark, _topk(rows, k))
 
     def _scatter_direct(
         self,
@@ -3865,67 +3392,14 @@ class IndexSearcher:
         must_mode: str = "or",
         extra_doc_cols: list[str] | None = None,
     ) -> DataFrame:
-        """One task per active shard; each reads its own shard dir (postings
-        term-filtered + norms) with pyarrow and scores locally. No shuffle —
-        the scan IS the scatter, the driver limit is the gather. On a
-        multi-executor cluster the segment store is HDFS/S3; pyarrow reads
-        both through its filesystem layer. ``mn_terms`` (ES must_not):
-        their doc streams are decoded per shard and the matching ids are
-        dropped from the admitted docs table, which makes the scorer's
-        ``present`` mask exclude them from every candidate set.
-        ``must_terms`` is the mirror-image mask-IN (the ``common`` query's
-        low-frequency selector): only docs whose ids appear in those terms'
-        doc streams (``must_mode``: 'or' = any, 'and' = all) stay admitted.
-        Both masks only shrink the candidate set, so BMW pruning bounds
-        remain admissible."""
-        index_dir = self.index_dir
-
-        def score_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for shard in pdf["shard"].tolist():
-                    pt, dt = _read_shard_tables(
-                        index_dir, shard, present, doc_filter,
-                        extra_doc_cols=extra_doc_cols,
-                    )
-                    if must_terms:
-                        incl = _facet_match_ids(index_dir, shard, must_terms, must_mode)
-                        dt = dt[dt["doc_id"].isin(incl)]
-                    if mn_terms:
-                        excl = _facet_match_ids(index_dir, shard, mn_terms, "or")
-                        if len(excl):
-                            dt = dt[~dt["doc_id"].isin(excl)]
-                    yield _score_shard(pt, dt, **kwargs)
-
-        return _one_task_per_shard(self.spark, active_shards).mapInPandas(
-            score_shards, "doc_id long, score double"
+        """The BM25 scatter: one task per active shard running
+        :func:`_direct_kernel` (arguments documented there). No shuffle —
+        the scan IS the scatter, the driver :func:`_topk` is the gather."""
+        kernel = _direct_kernel(
+            self.index_dir, present, kwargs, doc_filter, mn_terms, must_terms,
+            must_mode, extra_doc_cols,
         )
-
-    def _scatter_cogroup(
-        self, active_shards: list[int], present: list[str], kwargs: dict[str, Any]
-    ) -> DataFrame:
-        """Catalyst-planned scatter: shuffle postings+norms by shard into a
-        cogrouped applyInPandas. Independent cross-check for the direct
-        engine (tested rank-identical)."""
-        spark = self.spark
-        postings = (
-            spark.read.parquet(f"{self.index_dir}/postings")
-            .where(F.col("term").isin(present))
-            .where(F.col("shard").isin(active_shards))
-        )
-        docs = (
-            spark.read.parquet(f"{self.index_dir}/docs")
-            .where(F.col("shard").isin(active_shards))
-            .select("doc_id", "dl", "shard")
-        )
-
-        def score(key, pdf: pd.DataFrame, ddf: pd.DataFrame) -> pd.DataFrame:
-            return _score_shard(pdf, ddf, **kwargs)
-
-        return (
-            postings.groupBy("shard")
-            .cogroup(docs.groupBy("shard"))
-            .applyInPandas(score, "doc_id long, score double")
-        )
+        return _scatter(self.spark, active_shards, kernel, _HITS)
 
 
 class MultiFieldIndexSearcher:
@@ -4003,8 +3477,7 @@ class MultiFieldIndexSearcher:
                 d = int(r["doc_id"])
                 if d not in best or r["score"] > best[d]:
                     best[d] = float(r["score"])
-        ranked = sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        return self.spark.createDataFrame(ranked, "doc_id long, score double")
+        return _hits(self.spark, _topk(best.items(), k))
 
     def multi_match(
         self,
@@ -4059,12 +3532,10 @@ def search_generations(
         d: float(b) for d, b in zip(index_dirs, boosts or [])
     }
     searchers = [IndexSearcher(spark, d) for d in index_dirs]
-    q_terms = tokenize(query)
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if not q_terms or not searchers:
-        return empty
-    weights = {t: float(c) for t, c in Counter(q_terms).items()}
+    weights = {t: float(c) for t, c in Counter(tokenize(query)).items()}
     terms = sorted(weights)
+    if not terms or not searchers:
+        return _hits(spark)
     # --- dfs pass: global stats across all generations ---
     df_global: dict[str, int] = {}
     n_docs, dl_total = 0, 0.0
@@ -4074,10 +3545,8 @@ def search_generations(
         n_docs += s.n_docs
         dl_total += s.avgdl * s.n_docs
     present = sorted(t for t in terms if df_global.get(t, 0) > 0)
-    if n_docs == 0 or not present:
-        return empty
-    if mode == "and" and len(present) < len(terms):
-        return empty
+    if n_docs == 0 or not present or (mode == "and" and len(present) < len(terms)):
+        return _hits(spark)
     avgdl = dl_total / n_docs
 
     # ONE scatter job across every index's active shards (a sequential
@@ -4086,16 +3555,11 @@ def search_generations(
     tasks: list[tuple[str, int]] = []
     meta: dict[str, dict] = {}
     for s in searchers:
-        dfreq_local, active = s._query_meta(present)
-        local_present = [t for t in present if t in dfreq_local]
-        if not local_present or (mode == "and" and len(local_present) < len(terms)):
-            continue
+        _, local_present, shards = s._active_shards(present, mode)
         meta[s.index_dir] = dict(
             present=local_present, id_space=s.id_space, n_shards=s.n_shards
         )
-        tasks.extend((s.index_dir, int(sh)) for sh in active)
-    if not tasks:
-        return empty
+        tasks.extend((s.index_dir, sh) for sh in shards)
     common = dict(
         weights=weights,
         dfreq=df_global,  # GLOBAL idf — the dfs_query_then_fetch contract
@@ -4107,29 +3571,15 @@ def search_generations(
         msm=None,
     )
 
-    def score_tasks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for d, sh in zip(pdf["dir"].tolist(), pdf["shard"].tolist()):
-                m = meta[d]
-                pt, dt = _read_shard_tables(d, int(sh), m["present"])
-                out = _score_shard(
-                    pt, dt, id_space=m["id_space"], n_shards=m["n_shards"], **common
-                )
-                b = boost_of.get(d, 1.0)
-                if b != 1.0:
-                    out = out.assign(score=out["score"] * b)
-                yield out
+    def kernel(task: tuple[str, int]) -> pd.DataFrame:
+        d, sh = task
+        m = meta[d]
+        pt, dt = _read_shard_tables(d, sh, m["present"])
+        out = _score_shard(pt, dt, id_space=m["id_space"], n_shards=m["n_shards"], **common)
+        b = boost_of.get(d, 1.0)
+        return out.assign(score=out["score"] * b) if b != 1.0 else out
 
-    task_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, max(1, len(tasks))),
-        "dir string, shard int",
-    )
-    rows = task_df.mapInPandas(score_tasks, "doc_id long, score double").collect()
-    rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    return spark.createDataFrame(
-        [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-        "doc_id long, score double",
-    )
+    return _scatter_topk(spark, tasks, kernel, k)
 
 
 def indices_query(
@@ -4166,7 +3616,6 @@ def indices_query(
         raise ValueError(f"indices query targets unknown indices {sorted(unknown)}")
     if not target_names:
         raise ValueError("indices query needs >= 1 target index")
-    empty = spark.createDataFrame([], "doc_id long, score double")
     searchers = [IndexSearcher(spark, d) for d in index_dirs]
     targets = set(target_names)
 
@@ -4193,7 +3642,7 @@ def indices_query(
         n_docs += s.n_docs
         dl_total += s.avgdl * s.n_docs
     if n_docs == 0:
-        return empty
+        return _hits(spark)
     avgdl = dl_total / n_docs
 
     tasks: list[tuple[str, int]] = []
@@ -4217,60 +3666,37 @@ def indices_query(
             )
             tasks.extend((s.index_dir, sh) for sh in doc_shards)
             continue
-        q_terms = tokenize(q)
-        weights = {t: float(c) for t, c in Counter(q_terms).items()}
+        weights = {t: float(c) for t, c in Counter(tokenize(q)).items()}
         present = sorted(t for t in weights if df_global.get(t, 0) > 0)
-        if not present or (mode == "and" and len(present) < len(q_terms)):
+        if mode == "and" and len(present) < len(weights):
             continue
-        dfreq_local, active = s._query_meta(present)
-        local_present = [t for t in present if t in dfreq_local]
-        if not local_present or (
-            mode == "and" and len(local_present) < len(q_terms)
-        ):
-            continue
+        _, local_present, shards = s._active_shards(present, mode)
         meta[s.index_dir] = dict(
             present=local_present, weights=weights, id_space=s.id_space,
             n_shards=s.n_shards, match_all=False,
         )
-        tasks.extend((s.index_dir, int(sh)) for sh in active)
-    if not tasks:
-        return empty
+        tasks.extend((s.index_dir, sh) for sh in shards)
     common = dict(dfreq=df_global, n_docs=n_docs, avgdl=avgdl, k=k,
                   mode=mode, pruned=pruned, msm=None)
 
-    def score_tasks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for d, sh in zip(pdf["dir"].tolist(), pdf["shard"].tolist()):
-                m = meta[d]
-                if m["match_all"]:
-                    dt = (
-                        pads.dataset(
-                            f"{d}/docs/shard={int(sh)}", format="parquet"
-                        )
-                        .to_table(columns=["doc_id"])
-                        .to_pandas()
-                    )
-                    ids = np.sort(dt["doc_id"].to_numpy(dtype=np.int64))[:k]
-                    yield pd.DataFrame(
-                        {"doc_id": ids, "score": np.ones(len(ids))}
-                    )
-                    continue
-                pt, dt = _read_shard_tables(d, int(sh), m["present"])
-                yield _score_shard(
-                    pt, dt, weights=m["weights"], id_space=m["id_space"],
-                    n_shards=m["n_shards"], **common
-                )
+    def kernel(task: tuple[str, int]) -> pd.DataFrame:
+        d, sh = task
+        m = meta[d]
+        if m["match_all"]:
+            dt = (
+                pads.dataset(f"{d}/docs/shard={sh}", format="parquet")
+                .to_table(columns=["doc_id"])
+                .to_pandas()
+            )
+            ids = np.sort(dt["doc_id"].to_numpy(dtype=np.int64))[:k]
+            return pd.DataFrame({"doc_id": ids, "score": np.ones(len(ids))})
+        pt, dt = _read_shard_tables(d, sh, m["present"])
+        return _score_shard(
+            pt, dt, weights=m["weights"], id_space=m["id_space"],
+            n_shards=m["n_shards"], **common
+        )
 
-    task_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, max(1, len(tasks))),
-        "dir string, shard int",
-    )
-    rows = task_df.mapInPandas(score_tasks, "doc_id long, score double").collect()
-    rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    return spark.createDataFrame(
-        [(int(r["doc_id"]), round_half_up6(r["score"])) for r in rows[:k]],
-        "doc_id long, score double",
-    )
+    return _scatter_topk(spark, tasks, kernel, k)
 
 
 def indices_query_sql(

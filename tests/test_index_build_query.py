@@ -16,8 +16,8 @@ from .oracle import brute_force_bm25
 
 from flume_elasticsearch_2_spark.queryset import QUERY_SET as QUERIES  # noqa: E402
 
-# engine cross-checks use a subset to bound suite runtime; the full fixed
-# set runs through the oracle and pruned-vs-exhaustive identities
+# the legacy-index read-back uses a subset to bound suite runtime; the full
+# fixed set runs through the oracle and pruned-vs-exhaustive identities
 ENGINE_QUERIES = QUERIES[::3]
 
 
@@ -72,13 +72,6 @@ def test_manifest_and_layout(index_dir):
     assert len(shards) == 4
 
 
-@pytest.mark.parametrize("query,mode", ENGINE_QUERIES)
-def test_direct_equals_cogroup_engine(searcher, query, mode):
-    d = [(r.doc_id, r.score) for r in searcher.search(query, k=10, mode=mode, engine="direct").collect()]
-    c = [(r.doc_id, r.score) for r in searcher.search(query, k=10, mode=mode, engine="cogroup").collect()]
-    assert d == c
-
-
 def test_terms_table_matches_declarative_stats(spark, index_dir, documents):
     """terms/ (df, cf) derived from postings read-back must equal a direct
     groupBy over the tokenized corpus."""
@@ -118,7 +111,7 @@ def test_postings_compressed_smaller_than_raw(spark, index_dir):
     assert row.nbytes / row.npost < 4.0
 
 
-@pytest.mark.parametrize("query,mode", ENGINE_QUERIES)
+@pytest.mark.parametrize("query,mode", QUERIES)
 def test_search_local_equals_spark_path(searcher, query, mode):
     """Driver-local serving path (no Spark job) is rank-identical to the
     scatter/gather path."""
@@ -499,11 +492,6 @@ def test_must_not_serving_rank_identical(documents, searcher, query, mode, mn):
     got = [tuple(r) for r in searcher.search(query, k=10, mode=mode, must_not=mn).collect()]
     want = [tuple(r) for r in bm25_topk(documents, query, k=10, mode=mode, must_not=mn).collect()]
     assert got == want
-
-
-def test_must_not_rejected_on_cogroup_engine(searcher):
-    with pytest.raises(ValueError, match="direct engine"):
-        searcher.search("dup", k=5, engine="cogroup", must_not="slow")
 
 
 @pytest.mark.parametrize(

@@ -40,17 +40,29 @@ def duck(sf_dir):
     return con
 
 
-@pytest.mark.parametrize("no_match", ["none", "all", Q2])
-def test_matches_duckdb(spark, gens, duck, no_match):
+@pytest.mark.parametrize(
+    "query,mode,no_match",
+    [
+        pytest.param(Q, "or", "none", id="none"),
+        pytest.param(Q, "or", "all", id="all"),
+        pytest.param(Q, "or", Q2, id=Q2),
+        # AND with a repeated term: the conjunction is over distinct terms
+        pytest.param("dup dup batch", "and", "none", id="dup dup batch-and-none"),
+        pytest.param("dup batch", "and", "none", id="dup batch-and-none"),
+        pytest.param("dup dup batch", "and", "all", id="dup dup batch-and-all"),
+    ],
+)
+def test_matches_duckdb(spark, gens, duck, query, mode, no_match):
     (dirs, half) = gens
     got = [
         tuple(r)
         for r in indices_query(
-            spark, dirs, ["g1", "g2"], ["g1"], Q, no_match_query=no_match, k=10
+            spark, dirs, ["g1", "g2"], ["g1"], query, no_match_query=no_match, k=10,
+            mode=mode,
         ).collect()
     ]
     want = duck.execute(
-        indices_query_sql(f"doc_id < {half}", Q, no_match_query=no_match, k=10)
+        indices_query_sql(f"doc_id < {half}", query, no_match_query=no_match, k=10, mode=mode)
     ).fetchall()
     assert got == [tuple(r) for r in want] and got
 

@@ -609,3 +609,44 @@ def test_or_filter_node_pushes_into_parquet_scan(spark, documents):
     plan = _plan(documents.where(_filters_col(t)).select("doc_id"))
     pushed = plan.split("PushedFilters")[1].split("]")[0]
     assert "Or(EqualTo(lang,en)" in pushed and "GreaterThanOrEqual(n_chars,900)" in pushed, plan
+
+
+def _group_jobs(sc, group: str) -> list[tuple[int, int]]:
+    """(stage count, task count) of every job run under one job group."""
+    st = sc.statusTracker()
+    out = []
+    for jid in st.getJobIdsForGroup(group):
+        stages = st.getJobInfo(jid).stageIds
+        out.append((len(stages), sum(st.getStageInfo(s).numTasks for s in stages)))
+    return out
+
+
+def test_serving_scatter_is_one_job_one_task_per_active_shard(spark, tmp_path_factory):
+    """search() and search_many() each run ONE Spark job: one narrow stage
+    with one task per active shard. An AND pairing a term held by one
+    shard with a term held by all four starts only the intersection's task
+    (and returns the declarative ranking); OR starts the union's."""
+    from flume_elasticsearch_2_spark.operators.topk import bm25_topk
+    from flume_elasticsearch_2_spark.plans.build_index import build_index
+    from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
+
+    rows = [(i, "hot pad" + (" rare" if i < 8 else "") + " pad" * (i % 5)) for i in range(200)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    d = str(tmp_path_factory.mktemp("scatter") / "idx")
+    build_index(spark, docs, d, n_shards=4)
+    s = IndexSearcher(spark, d)
+    sc = spark.sparkContext
+    cases = [("rare hot", "and", 1), ("rare hot", "or", 4), ("hot", "or", 4)]
+    try:
+        for i, (q, mode, n_active) in enumerate(cases):
+            group = f"hyg-scatter-{i}"
+            sc.setJobGroup(group, "search")
+            got = [tuple(r) for r in s.search(q, k=10, mode=mode).collect()]
+            assert _group_jobs(sc, group) == [(1, n_active)], (q, mode)
+            want = [tuple(r) for r in bm25_topk(docs, q, k=10, mode=mode).collect()]
+            assert got == want and got, (q, mode)
+        sc.setJobGroup("hyg-scatter-many", "search_many")
+        s.search_many({"a": ("rare hot", "and"), "b": ("rare", "or")}, k=10).collect()
+        assert _group_jobs(sc, "hyg-scatter-many") == [(1, 1)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

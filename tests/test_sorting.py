@@ -101,12 +101,10 @@ def test_serving_sorted_identical(sort_searcher, documents, query, mode, sort_by
 
 
 def test_serving_scored_paging_slices_full_ranking(sort_searcher):
-    """search(k, from_) == rows [from_, from_+k) of the full ranking, on
-    both gather engines."""
+    """search(k, from_) == rows [from_, from_+k) of the full ranking."""
     full = sort_searcher.search("dup batch scan", k=30).collect()
-    for engine in ("direct", "cogroup"):
-        page = sort_searcher.search("dup batch scan", k=10, from_=10, engine=engine).collect()
-        assert [tuple(r) for r in page] == [tuple(r) for r in full[10:20]]
+    page = sort_searcher.search("dup batch scan", k=10, from_=10).collect()
+    assert [tuple(r) for r in page] == [tuple(r) for r in full[10:20]]
 
 
 def test_serving_scored_paging_beyond_results_is_empty(sort_searcher):
