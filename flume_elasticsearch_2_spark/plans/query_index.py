@@ -9,8 +9,10 @@ Scatter/gather shape mirrors ES query-then-fetch (the [delegated] layer at
    (:meth:`IndexSearcher._query_meta`, no Spark job); the one activation
    rule (:meth:`IndexSearcher._active_shards`) keeps the union of those
    shards for OR and their intersection for AND/phrase (Q2),
-3. :func:`_scatter` starts one task per active shard; each task's kernel
-   reads its own shard's postings + norms straight from Parquet (pyarrow,
+3. :func:`_scatter` runs one kernel call per active shard, packed into at
+   most ``defaultParallelism`` Spark tasks over a JVM-native ``range``
+   (one wave, one Python worker per task); each kernel call reads its own
+   shard's postings + norms straight from Parquet (pyarrow,
    column-pruned, term-filtered) and scores its doc range — posting decode
    + DAAT accumulation in NumPy (Q3/Q4) with **block-max pruning** (Q5):
    per-128-doc blocks carry max-tf metadata; doc-range segments are
@@ -46,6 +48,8 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..codec import BLOCK_SIZE, svb_decode_slice, svb_lens
 from ..functions.bm25 import B, K1
@@ -1155,25 +1159,39 @@ def _scatter(
     kernel: Callable[[Any], pd.DataFrame | None],
     schema: str,
 ) -> DataFrame:
-    """The one Python-task boundary of the serving path: one Spark task per
-    entry of ``tasks`` (a shard, or a ``(dir, shard)`` pair across
-    generations), each running ``kernel(task)`` and emitting its pandas
-    partial (``None`` = nothing). The task list is pre-sliced one entry per
-    partition (parallelize with numSlices=len), so the plan is one narrow
-    stage with no repartition exchange. ``kernel`` is shipped to the
-    executors and must not capture the searcher. No tasks, no job."""
+    """The one Python-task boundary of the serving path: runs
+    ``kernel(task)`` for every entry of ``tasks`` (a shard, or a
+    ``(dir, shard)`` pair across generations), each emitting its pandas
+    partial (``None`` = nothing). The task ids come from a JVM-native
+    ``range`` split into at most ``defaultParallelism`` contiguous Spark
+    tasks, so the scatter is one narrow stage run in one wave, with one
+    Python worker per task and no exchange; collected rows keep task
+    order. ``kernel`` is shipped to the executors and must not capture the
+    searcher. No tasks, no job."""
     if not tasks:
-        return spark.createDataFrame([], schema)
+        return _relation(spark, schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for i in pdf["i"].tolist():
+            for i in pdf["id"].tolist():
                 out = kernel(tasks[i])
                 if out is not None:
                     yield out
 
-    rdd = spark.sparkContext.parallelize([(i,) for i in range(len(tasks))], len(tasks))
-    return spark.createDataFrame(rdd, "i int").mapInPandas(run, schema)
+    n_slices = min(len(tasks), spark.sparkContext.defaultParallelism)
+    return spark.range(0, len(tasks), 1, n_slices).mapInPandas(run, schema)
+
+
+def _relation(
+    spark: SparkSession, schema: str, pdf: pd.DataFrame | None = None
+) -> DataFrame:
+    """A driver-built result as a local relation, so collecting it starts
+    no Spark job. An empty result is an empty Arrow table: Spark turns an
+    empty list or an empty pandas frame into an RDD, whose collect is a
+    job of empty tasks."""
+    if pdf is not None and len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    return spark.createDataFrame(to_arrow_schema(StructType.fromDDL(schema)).empty_table())
 
 
 _HITS = "doc_id long, score double"
@@ -1190,11 +1208,8 @@ def _page(top: list[tuple[int, float]]) -> pd.DataFrame:
 
 
 def _hits(spark: SparkSession, top: list[tuple[int, float]] = ()) -> DataFrame:
-    """A (doc_id, score) page as a DataFrame — empty by default. Built from
-    pandas through Arrow, it is a local relation: collecting it starts no
-    Spark job (a DataFrame made from a Python list is an RDD, and its
-    collect would be a second job after the scatter)."""
-    return spark.createDataFrame(_page(list(top)), _HITS)
+    """A (doc_id, score) page as a :func:`_relation` — empty by default."""
+    return _relation(spark, _HITS, _page(list(top)))
 
 
 def _topk(rows, k: int, from_: int = 0) -> list[tuple[int, float]]:
@@ -1461,7 +1476,8 @@ class IndexSearcher:
 
         This is the ES data-node request path without the cluster hop — the
         right shape for interactive/low-latency use where the per-query
-        Spark task-launch overhead (~0.5-1 s) dwarfs actual scoring (~ms).
+        Spark job (~0.3-0.4 s on 4 cores: job launch plus one Python worker
+        per task) dwarfs actual scoring (~ms).
         The plan, the shard kernel and the gather are :meth:`search`'s, so
         the two are rank-identical; tested against it. On a cluster this
         runs on whatever node holds/mounts the segment store — shards are
@@ -1767,8 +1783,9 @@ class IndexSearcher:
         gives it, from one metadata read for the whole batch.
 
         This is the serving shape for query *throughput* at scale: per-query
-        ``search`` pays one Spark job (task launch dominates the ~ms NumPy
-        scoring), while here each shard task reads its postings once
+        ``search`` pays one Spark job (~0.3-0.4 s of job launch and Python
+        workers on 4 cores, against ~ms of NumPy scoring), while here each
+        shard kernel reads its postings once
         (Parquet-filtered to the union of all query terms) and scores every
         query that touches the shard, so N queries cost one job and one
         postings read per shard. The gather stays tiny: at most
@@ -1790,7 +1807,7 @@ class IndexSearcher:
                 )
             parsed[qid] = (q_terms, mode, q_msm)
         if not parsed:
-            return self.spark.createDataFrame([], out_schema)
+            return _relation(self.spark, out_schema)
         meta = self._query_meta(sorted({t for q, _, _ in parsed.values() for t in q}))
 
         specs: dict[str, dict[str, Any]] = {}
@@ -1816,7 +1833,7 @@ class IndexSearcher:
             for s in shards:
                 shard_qids.setdefault(s, []).append(qid)
         if not specs:
-            return self.spark.createDataFrame([], out_schema)
+            return _relation(self.spark, out_schema)
         shard_terms = {
             s: sorted({t for qid in qids for t in specs[qid]["present"]})
             for s, qids in shard_qids.items()
@@ -1867,8 +1884,7 @@ class IndexSearcher:
             [(qid, d, s) for qid in sorted(specs) for d, s in _topk(by_qid.get(qid, []), k)],
             columns=["query_id", "doc_id", "score"],
         ).astype({"doc_id": "int64", "score": "float64"})
-        # built through Arrow: a local relation, so no second job to collect
-        return self.spark.createDataFrame(merged, out_schema)
+        return _relation(self.spark, out_schema, merged)
 
     def expand_terms(
         self,
@@ -2037,7 +2053,7 @@ class IndexSearcher:
         from ..operators.multiterm import _phrase_candidates
 
         input_terms = tokenize(text)
-        empty = self.spark.createDataFrame([], "suggestion string, score double")
+        empty = _relation(self.spark, "suggestion string, score double")
         if not input_terms:
             return empty
         ds = pads.dataset(f"{self.index_dir}/terms", format="parquet")
@@ -2271,8 +2287,8 @@ class IndexSearcher:
         from collections import Counter as _Counter
 
         row = self.mget([int(doc_id)], columns=["text"]).collect()
-        empty = self.spark.createDataFrame(
-            [], "term string, term_freq long, doc_freq long, ttf long"
+        empty = _relation(
+            self.spark, "term string, term_freq long, doc_freq long, ttf long"
         )
         if not row or row[0]["text"] is None:
             return empty
@@ -2301,8 +2317,8 @@ class IndexSearcher:
         passes, batch cost ≈ one doc's."""
         from collections import Counter as _Counter
 
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, term string, term_freq long, doc_freq long, ttf long"
+        empty = _relation(
+            self.spark, "doc_id long, term string, term_freq long, doc_freq long, ttf long"
         )
         rows = self.mget(sorted({int(i) for i in doc_ids}), columns=["text"]).collect()
         tfs = {int(r["doc_id"]): _Counter(tokenize(r["text"] or "")) for r in rows}
@@ -2359,7 +2375,7 @@ class IndexSearcher:
         from ..operators.explain import _SCHEMA, breakdown_rows
 
         q_terms = tokenize(query)
-        empty = self.spark.createDataFrame([], _SCHEMA)
+        empty = _relation(self.spark, _SCHEMA)
         if not q_terms:
             return empty
         weights = {
@@ -3121,8 +3137,8 @@ class IndexSearcher:
             raise ValueError("significant_terms needs a foreground query")
         spark, index_dir = self.spark, self.index_dir
         _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
-        empty = spark.createDataFrame(
-            [], "term string, fg_count long, bg_count long, score double"
+        empty = _relation(
+            spark, "term string, fg_count long, bg_count long, score double"
         )
         if not shards:
             return empty
@@ -3227,7 +3243,7 @@ class IndexSearcher:
 
         _, present, shards = self._active_shards(sorted(set(tokenize(query))), mode)
         if not shards:
-            return spark.createDataFrame([], ddl)
+            return _relation(spark, ddl)
 
         def shard_tops(shard: int) -> pd.DataFrame | None:
             sub = _matched_docs(index_dir, shard, present, mode, ["doc_id"] + fields)
@@ -3392,9 +3408,10 @@ class IndexSearcher:
         must_mode: str = "or",
         extra_doc_cols: list[str] | None = None,
     ) -> DataFrame:
-        """The BM25 scatter: one task per active shard running
-        :func:`_direct_kernel` (arguments documented there). No shuffle —
-        the scan IS the scatter, the driver :func:`_topk` is the gather."""
+        """The BM25 scatter: :func:`_direct_kernel` (arguments documented
+        there) once per active shard, packed by :func:`_scatter` into at
+        most ``defaultParallelism`` tasks. No shuffle — the scan IS the
+        scatter, the driver :func:`_topk` is the gather."""
         kernel = _direct_kernel(
             self.index_dir, present, kwargs, doc_filter, mn_terms, must_terms,
             must_mode, extra_doc_cols,
@@ -3495,6 +3512,23 @@ class MultiFieldIndexSearcher:
         )
 
 
+def _dfs_pass(
+    searchers: list[IndexSearcher], terms: list[str]
+) -> tuple[list[tuple[dict[str, int], dict[str, set[int]]]], dict[str, int], int, float]:
+    """The ``dfs_query_then_fetch`` stats pass over several indexes: one
+    :meth:`IndexSearcher._query_meta` read per index (no Spark job),
+    returned for reuse by that index's :meth:`IndexSearcher._active_shards`,
+    plus the GLOBAL df per term, n_docs and avgdl (0.0 when empty)."""
+    metas = [s._query_meta(terms) for s in searchers]
+    df_global: dict[str, int] = {}
+    for dfreq, _ in metas:
+        for t, d in dfreq.items():
+            df_global[t] = df_global.get(t, 0) + d
+    n_docs = sum(s.n_docs for s in searchers)
+    dl_total = sum(s.avgdl * s.n_docs for s in searchers)
+    return metas, df_global, n_docs, dl_total / n_docs if n_docs else 0.0
+
+
 def search_generations(
     spark: SparkSession,
     index_dirs: list[str],
@@ -3507,16 +3541,17 @@ def search_generations(
     """ES multi-index (alias) search across UNMERGED generations with
     ``dfs_query_then_fetch`` semantics: a distributed-frequencies pass
     first computes GLOBAL df / n_docs / avgdl across every index (driver-
-    side dictionary reads — metadata-scale), then each index's shards score
+    side postings-metadata reads, :func:`_dfs_pass`), then each index's shards score
     with those global constants, and one coordinator gather merges the
     per-index top-k. Result is rank- AND score-identical to querying the
     MERGED index (pinned by tests) — the serving story for a streaming
     deployment that queries the live union of generations between merges.
 
     Requires the generations contract (disjoint doc ids; chunked/streaming
-    ingest guarantees it). Scale shape: the dfs pass is |indexes| tiny
-    dictionary reads; the scatter is the same one-task-per-shard direct
-    engine per index; the gather is <= sum(shards)·k rows.
+    ingest guarantees it). Scale shape: the dfs pass is one
+    :meth:`IndexSearcher._query_meta` read per index (no Spark job); the
+    scatter is one job over every index's active shards; the gather is
+    <= sum(shards)·k rows.
 
     ``boosts`` (one float per index dir) is ES ``indices_boost``: every
     hit's UNROUNDED score is multiplied by its index's boost before the
@@ -3537,25 +3572,18 @@ def search_generations(
     if not terms or not searchers:
         return _hits(spark)
     # --- dfs pass: global stats across all generations ---
-    df_global: dict[str, int] = {}
-    n_docs, dl_total = 0, 0.0
-    for s in searchers:
-        for t, d in s.term_stats(terms).items():
-            df_global[t] = df_global.get(t, 0) + int(d)
-        n_docs += s.n_docs
-        dl_total += s.avgdl * s.n_docs
+    metas, df_global, n_docs, avgdl = _dfs_pass(searchers, terms)
     present = sorted(t for t in terms if df_global.get(t, 0) > 0)
     if n_docs == 0 or not present or (mode == "and" and len(present) < len(terms)):
         return _hits(spark)
-    avgdl = dl_total / n_docs
 
     # ONE scatter job across every index's active shards (a sequential
     # per-index loop would serialize |indexes| Spark jobs); per-index
     # geometry rides in a small closure dict keyed by index dir
     tasks: list[tuple[str, int]] = []
     meta: dict[str, dict] = {}
-    for s in searchers:
-        _, local_present, shards = s._active_shards(present, mode)
+    for s, s_meta in zip(searchers, metas):
+        _, local_present, shards = s._active_shards(present, mode, s_meta)
         meta[s.index_dir] = dict(
             present=local_present, id_space=s.id_space, n_shards=s.n_shards
         )
@@ -3604,9 +3632,9 @@ def indices_query(
     — BOTH queries' term stats (df / n_docs / avgdl) are GLOBAL across
     every index in the alias, so a doc's score depends only on which query
     its index runs, never on generation boundaries; the union's top-k is
-    merged on the coordinator. Scale shape: one dictionary-read dfs pass
-    per index, ONE scatter job across all active shards, <= shards·k rows
-    gathered."""
+    merged on the coordinator. Scale shape: one postings-metadata dfs read
+    per index (no Spark job), ONE scatter job across all active shards,
+    <= shards·k rows gathered."""
     if len(names) != len(index_dirs):
         raise ValueError("names must have one entry per index dir")
     if len(set(names)) != len(names):
@@ -3634,20 +3662,13 @@ def indices_query(
         {t for q in q_of.values() if q for t in tokenize(q)}
     )
     # --- dfs pass: GLOBAL stats across all generations, both queries ---
-    df_global: dict[str, int] = {}
-    n_docs, dl_total = 0, 0.0
-    for s in searchers:
-        for t, d in s.term_stats(all_terms).items():
-            df_global[t] = df_global.get(t, 0) + int(d)
-        n_docs += s.n_docs
-        dl_total += s.avgdl * s.n_docs
+    metas, df_global, n_docs, avgdl = _dfs_pass(searchers, all_terms)
     if n_docs == 0:
         return _hits(spark)
-    avgdl = dl_total / n_docs
 
     tasks: list[tuple[str, int]] = []
     meta: dict[str, dict] = {}
-    for s, nm in zip(searchers, names):
+    for s, nm, s_meta in zip(searchers, names, metas):
         q = q_of[nm]
         if q is None:
             continue
@@ -3670,7 +3691,7 @@ def indices_query(
         present = sorted(t for t in weights if df_global.get(t, 0) > 0)
         if mode == "and" and len(present) < len(weights):
             continue
-        _, local_present, shards = s._active_shards(present, mode)
+        _, local_present, shards = s._active_shards(present, mode, s_meta)
         meta[s.index_dir] = dict(
             present=local_present, weights=weights, id_space=s.id_space,
             n_shards=s.n_shards, match_all=False,

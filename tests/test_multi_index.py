@@ -56,6 +56,19 @@ def test_generations_match_duckdb(spark, sf_dir, generations):
     assert got == want and got
 
 
+def test_generations_dfs_pass_starts_no_job(spark, generations):
+    """The dfs pass reads postings metadata on the driver, so a query over
+    two generations runs exactly one Spark job: the scatter."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("gen-jobs", "search_generations")
+        got = search_generations(spark, generations, "dup batch scan", k=10).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("gen-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got and len(jobs) == 1
+
+
 def test_single_generation_degenerates_to_plain_search(spark, generations):
     got = [tuple(r) for r in search_generations(spark, generations[:1], "dup batch", k=5).collect()]
     want = [

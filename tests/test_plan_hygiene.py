@@ -623,9 +623,10 @@ def _group_jobs(sc, group: str) -> list[tuple[int, int]]:
 
 def test_serving_scatter_is_one_job_one_task_per_active_shard(spark, tmp_path_factory):
     """search() and search_many() each run ONE Spark job: one narrow stage
-    with one task per active shard. An AND pairing a term held by one
-    shard with a term held by all four starts only the intersection's task
-    (and returns the declarative ranking); OR starts the union's."""
+    with one task per active shard, up to ``defaultParallelism``. An AND
+    pairing a term held by one shard with a term held by all four starts
+    only the intersection's task (and returns the declarative ranking); OR
+    starts the union's."""
     from flume_elasticsearch_2_spark.operators.topk import bm25_topk
     from flume_elasticsearch_2_spark.plans.build_index import build_index
     from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
@@ -648,5 +649,63 @@ def test_serving_scatter_is_one_job_one_task_per_active_shard(spark, tmp_path_fa
         sc.setJobGroup("hyg-scatter-many", "search_many")
         s.search_many({"a": ("rare hot", "and"), "b": ("rare", "or")}, k=10).collect()
         assert _group_jobs(sc, "hyg-scatter-many") == [(1, 1)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_scatter_packs_tasks_to_default_parallelism(spark):
+    """More shard tasks than cores run as ONE job of ONE stage with exactly
+    ``defaultParallelism`` Spark tasks (one wave), and the collected rows
+    keep the task order."""
+    import pandas as pd
+
+    from flume_elasticsearch_2_spark.plans.query_index import _scatter
+
+    sc = spark.sparkContext
+    tasks = list(range(2 * sc.defaultParallelism + 1))
+    try:
+        sc.setJobGroup("hyg-scatter-pack", "_scatter")
+        rows = _scatter(
+            spark, tasks, lambda t: pd.DataFrame({"t": [t]}), "t long"
+        ).collect()
+        assert _group_jobs(sc, "hyg-scatter-pack") == [(1, sc.defaultParallelism)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["t"] for r in rows] == tasks
+
+
+def test_empty_serving_results_start_no_job(spark, tmp_path_factory):
+    """A query no doc can match returns its typed, empty page without a
+    Spark job: a missing term, an AND of terms held in disjoint shards (an
+    empty shard intersection), and a search_many batch where every query
+    misses."""
+    from flume_elasticsearch_2_spark.plans.build_index import build_index
+    from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
+
+    rows = [
+        (i, "pad" + (" head" if i < 8 else "") + (" tail" if i >= 192 else ""))
+        for i in range(200)
+    ]
+    d = str(tmp_path_factory.mktemp("empty") / "idx")
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), d, n_shards=4)
+    s = IndexSearcher(spark, d)
+    assert not set(s._active_shards(["head"])[2]) & set(s._active_shards(["tail"])[2])
+    sc = spark.sparkContext
+    cases = [
+        ("miss", lambda: s.search("zzzznotaterm", k=10), "struct<doc_id:bigint,score:double>"),
+        ("disjoint-and", lambda: s.search("head tail", k=10, mode="and"),
+         "struct<doc_id:bigint,score:double>"),
+        ("many-miss", lambda: s.search_many(
+            {"a": ("zzzznotaterm", "or"), "b": ("head tail", "and")}, k=10),
+         "struct<query_id:string,doc_id:bigint,score:double>"),
+    ]
+    try:
+        for name, run, schema in cases:
+            group = f"hyg-empty-{name}"
+            sc.setJobGroup(group, name)
+            df = run()
+            assert df.collect() == [], name
+            assert _group_jobs(sc, group) == [], name
+            assert df.schema.simpleString() == schema, name
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
