@@ -7,7 +7,12 @@ Lemire's "Stream VByte" (2017)).
 
 Everything here is pure NumPy — vectorized shifts/masks, no per-row Python —
 so it can run inside Arrow-batched UDF bodies on executors without the
-row-at-a-time Python penalty. Format:
+row-at-a-time Python penalty. The one encoder, :func:`encode_postings_batch`,
+encodes a whole batch of posting lists (groups given by offsets) in one
+segmented pass and returns Arrow arrays; :func:`encode_postings`
+and :func:`encode_positions` are its one-group cases, :func:`svb_encode` the
+one-segment case of its Stream-VByte pass.
+Format:
 
 * Stream VByte: for n uint32 values, a control stream of ceil(n/4) bytes
   (2 bits per value = byte-length-1) followed by a data stream of the values'
@@ -22,6 +27,7 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -31,26 +37,44 @@ _SHIFTS = np.array([0, 8, 16, 24], dtype=np.uint32)
 def svb_encode(values: np.ndarray) -> bytes:
     """Stream-VByte-encode a uint32 array. Returns control||data bytes."""
     v = np.ascontiguousarray(values, dtype=np.uint32)
+    return _svb_segments(v, np.array([0, v.size], dtype=np.int64))[1].tobytes()
+
+
+def _svb_segments(values: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Stream-VByte-encode every segment ``values[offsets[g]:offsets[g+1]]``
+    on its own, in one pass: segment g's control||data bytes are
+    ``data[out_offsets[g]:out_offsets[g+1]]`` of the returned
+    ``(out_offsets, data)``. Each segment pads its last control byte with
+    length code 0, so a segment's bytes equal a lone encode of its values."""
+    v = np.ascontiguousarray(values, dtype=np.uint32)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    counts = np.diff(offsets)
     n = v.size
     if n == 0:
-        return b""
-    # byte length per value: 1..4
-    lens = np.ones(n, dtype=np.uint8)
-    lens[v >= 1 << 8] = 2
-    lens[v >= 1 << 16] = 3
-    lens[v >= 1 << 24] = 4
-    # control bytes: 2 bits per value, 4 values per byte (pad with len-1=0)
-    pad = (-n) % 4
-    codes = np.concatenate([lens - 1, np.zeros(pad, dtype=np.uint8)])
-    codes = codes.reshape(-1, 4)
-    control = (
-        codes[:, 0] | (codes[:, 1] << 2) | (codes[:, 2] << 4) | (codes[:, 3] << 6)
-    ).astype(np.uint8)
-    # data bytes: scatter each value's first `len` LE bytes
+        return np.zeros(len(counts) + 1, dtype=np.int64), np.empty(0, dtype=np.uint8)
+    # length code per value: byte length - 1, 0..3
+    codes = (v >= 1 << 8).astype(np.uint8)
+    codes += v >= 1 << 16
+    codes += v >= 1 << 24
+    blen = codes.astype(np.int64) + 1
+    # position of each value within its segment; a control byte starts at
+    # every fourth one (the segments' starts included)
+    k = np.arange(n, dtype=np.int64) - np.repeat(offsets[:-1], counts)
+    r = (k & 3).astype(np.uint8)
+    control = np.add.reduceat(codes << (r << 1), np.flatnonzero(r == 0)).astype(np.uint8)
+    nctrl = (counts + 3) // 4
+    csum = np.concatenate([[0], np.cumsum(blen)])
+    ndata = csum[offsets[1:]] - csum[offsets[:-1]]
+    out_offsets = np.concatenate([[0], np.cumsum(nctrl + ndata)])
+    # each segment's control bytes come first, then its data bytes
+    is_ctrl = np.zeros(int(out_offsets[-1]), dtype=bool)
+    is_ctrl[np.arange(control.size) + np.repeat(out_offsets[:-1] - np.cumsum(nctrl) + nctrl, nctrl)] = True
     le = (v[:, None] >> _SHIFTS[None, :]).astype(np.uint8)  # (n, 4) LE bytes
-    mask = np.arange(4, dtype=np.uint8)[None, :] < lens[:, None]
-    data = le[mask]  # row-major selection preserves per-value byte order
-    return control.tobytes() + data.tobytes()
+    mask = np.arange(4, dtype=np.int64)[None, :] < blen[:, None]
+    data = np.empty(is_ctrl.size, dtype=np.uint8)
+    data[is_ctrl] = control
+    data[~is_ctrl] = le[mask]  # row-major selection preserves per-value byte order
+    return out_offsets, data
 
 
 def svb_decode(buf: bytes, n: int) -> np.ndarray:
@@ -152,41 +176,172 @@ class EncodedPostings(NamedTuple):
     block_min_dl: np.ndarray  # int32[nblocks] min doc length within each block
 
 
-def encode_postings(
-    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray | None = None
-) -> EncodedPostings:
-    """Encode one sorted (doc_ids, tfs) posting list with block metadata.
+class EncodedBatch(NamedTuple):
+    """Many posting lists encoded at once, one entry per group (Arrow
+    arrays, so a ``mapInArrow`` body can emit them without per-row
+    Python objects)."""
 
-    ``dls`` (doc length per posting, aligned with ``doc_ids``) enables TRUE
+    n: np.ndarray  # int64[G] postings per group (== df)
+    cf: np.ndarray  # int64[G] summed tf per group
+    doc_bytes: pa.BinaryArray  # delta + Stream VByte doc ids
+    tf_bytes: pa.BinaryArray  # Stream VByte term frequencies
+    pos_bytes: pa.BinaryArray  # Stream VByte positions, b"" without them
+    block_first_doc: pa.ListArray  # list<int64>
+    block_last_doc: pa.ListArray  # list<int64>
+    block_max_tf: pa.ListArray  # list<int32>
+    block_min_dl: pa.ListArray  # list<int32>
+
+
+def binary_array(offsets: np.ndarray, data: np.ndarray) -> pa.BinaryArray:
+    """Arrow binary array whose row i is ``data[offsets[i]:offsets[i+1]]``
+    (byte offsets, uint8 ``data``), built from the buffers without copying
+    rows one by one."""
+    if data.size >= 1 << 31:
+        raise ValueError(f"{data.size} encoded bytes overflow one Arrow binary batch")
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def _lists(offsets: pa.Array, values: np.ndarray, type_: pa.DataType) -> pa.ListArray:
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(values, type=type_), type=pa.list_(pa.field("element", type_))
+    )
+
+
+def encode_postings_batch(
+    ids: np.ndarray,
+    tfs: np.ndarray,
+    offsets: np.ndarray,
+    dls: np.ndarray | None = None,
+    positions: np.ndarray | None = None,
+    has_pos: np.ndarray | None = None,
+    bases: np.ndarray | None = None,
+) -> EncodedBatch:
+    """Encode every group ``[offsets[g], offsets[g+1])`` of a flat
+    ``(ids, tfs)`` batch as its own posting list, in one segmented NumPy
+    pass: one ``argsort`` on ``(group << 32) | id`` (only when some group's
+    ids are out of order, e.g. interleaved runs), a segmented delta, a
+    segmented Stream VByte (:func:`_svb_segments`) and ``reduceat`` over
+    the block starts. Byte-identical, group by group, to encoding each
+    sorted group alone.
+
+    ``dls`` (doc length per posting, aligned with ``ids``) enables TRUE
     block-max bounds: BM25's per-term score is increasing in tf and
     decreasing in dl, so ``f(block_max_tf, block_min_dl)`` upper-bounds every
     doc in the block much tighter than the dl->0 bound. Stored as raw
     (tf, dl) extrema — parameter-free, so the bound stays valid for any
     (k1, b, avgdl) chosen at query time (Lucene BMW stores impact pairs for
     the same reason). ``dls=None`` stores 0, which the query side reads as
-    "unknown" and degrades to the dl->0 bound."""
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.uint32)
+    "unknown" and degrades to the dl->0 bound.
+
+    ``positions`` is the concatenation, posting by posting in input order,
+    of each posting's ascending in-doc positions (``tf`` of them) for the
+    groups where ``has_pos`` is set (all groups by default); other groups
+    get ``pos_bytes = b""``. Positions are delta-coded within each posting
+    (see :func:`encode_positions`). ``bases`` (int64 per group) is added
+    to the block first/last doc ids, so shard-local ids come out global."""
+    ids = np.ascontiguousarray(ids, dtype=np.uint32)
     tfs = np.ascontiguousarray(tfs, dtype=np.uint32)
-    n = doc_ids.size
-    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    starts = np.arange(nblocks) * BLOCK_SIZE
-    bounds = np.minimum(starts + BLOCK_SIZE, n) - 1
-    firsts = doc_ids[starts].astype(np.int64)
-    lasts = doc_ids[bounds].astype(np.int64)
-    max_tf = np.maximum.reduceat(tfs, starts).astype(np.int32) if n else np.empty(0, np.int32)
-    if dls is None:
-        min_dl = np.zeros(nblocks, dtype=np.int32)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    counts = np.diff(offsets)
+    n_groups = counts.size
+    group = np.repeat(np.arange(n_groups, dtype=np.int64), counts)
+    starts = offsets[:-1][counts > 0]
+    # segmented sort: only groups whose runs interleave need it
+    rising = ids[1:] > ids[:-1]
+    rising[starts[1:] - 1] = True
+    order, tfs_in = None, tfs
+    if not rising.all():
+        order = np.argsort((group << 32) | ids, kind="stable")
+        ids, tfs = ids[order], tfs[order]
+        if dls is not None:
+            dls = np.asarray(dls)[order]
+    # segmented delta: first id of each group stays absolute
+    deltas = np.empty_like(ids)
+    deltas[1:] = ids[1:] - ids[:-1]
+    deltas[starts] = ids[starts]
+    doc_off, doc_data = _svb_segments(deltas, offsets)
+    tf_off, tf_data = _svb_segments(tfs, offsets)
+    tf_cum = np.concatenate([[0], np.cumsum(tfs, dtype=np.int64)])
+    cf = tf_cum[offsets[1:]] - tf_cum[offsets[:-1]]
+
+    if positions is None:
+        pos_off, pos_data = np.zeros(n_groups + 1, dtype=np.int64), np.empty(0, np.uint8)
     else:
-        dls = np.ascontiguousarray(dls, dtype=np.int64)
-        min_dl = np.minimum.reduceat(dls, starts).astype(np.int32) if n else np.empty(0, np.int32)
+        positions = np.ascontiguousarray(positions, dtype=np.uint32)
+        # each posting's position-segment length and start, in input order
+        plen = tfs_in.astype(np.int64)
+        if has_pos is not None:
+            plen[~np.asarray(has_pos, dtype=bool)[group]] = 0
+        if int(plen.sum()) != positions.size:
+            raise ValueError(f"{positions.size} positions for {int(plen.sum())} occurrences")
+        pstart = np.cumsum(plen) - plen
+        if order is not None:
+            # move each posting's position segment along with the posting
+            plen = plen[order]
+            sstart = np.cumsum(plen) - plen
+            positions = positions[np.repeat(pstart[order] - sstart, plen) + np.arange(positions.size)]
+            pstart = sstart
+        pdelta = np.empty_like(positions)
+        pdelta[1:] = positions[1:] - positions[:-1]
+        firsts = pstart[plen > 0]
+        pdelta[firsts] = positions[firsts]
+        pcum = np.concatenate([[0], np.cumsum(plen)])
+        pos_off, pos_data = _svb_segments(pdelta, pcum[offsets])
+
+    nblocks = (counts + BLOCK_SIZE - 1) // BLOCK_SIZE
+    boff = np.concatenate([[0], np.cumsum(nblocks)])
+    bgroup = np.repeat(np.arange(n_groups, dtype=np.int64), nblocks)
+    bstart = offsets[bgroup] + (np.arange(boff[-1], dtype=np.int64) - boff[bgroup]) * BLOCK_SIZE
+    blast = np.minimum(bstart + BLOCK_SIZE, offsets[bgroup + 1]) - 1
+    first = ids[bstart].astype(np.int64)
+    last = ids[blast].astype(np.int64)
+    if bases is not None:
+        shift = np.repeat(np.asarray(bases, dtype=np.int64), nblocks)
+        first += shift
+        last += shift
+    if bstart.size:
+        max_tf = np.maximum.reduceat(tfs, bstart).astype(np.int32)
+        min_dl = (
+            np.zeros(bstart.size, np.int32)
+            if dls is None
+            else np.minimum.reduceat(np.asarray(dls, dtype=np.int64), bstart).astype(np.int32)
+        )
+    else:
+        max_tf = min_dl = np.empty(0, np.int32)
+    block_off = pa.array(boff.astype(np.int32))
+    return EncodedBatch(
+        n=counts,
+        cf=cf,
+        doc_bytes=binary_array(doc_off, doc_data),
+        tf_bytes=binary_array(tf_off, tf_data),
+        pos_bytes=binary_array(pos_off, pos_data),
+        block_first_doc=_lists(block_off, first, pa.int64()),
+        block_last_doc=_lists(block_off, last, pa.int64()),
+        block_max_tf=_lists(block_off, max_tf, pa.int32()),
+        block_min_dl=_lists(block_off, min_dl, pa.int32()),
+    )
+
+
+def encode_postings(
+    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray | None = None
+) -> EncodedPostings:
+    """Encode one (doc_ids, tfs) posting list with block metadata: the
+    one-group case of :func:`encode_postings_batch` (see there for
+    ``dls``)."""
+    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.uint32)
+    b = encode_postings_batch(doc_ids, tfs, np.array([0, doc_ids.size]), dls)
     return EncodedPostings(
-        n=n,
-        doc_bytes=svb_encode(delta_encode(doc_ids)),
-        tf_bytes=svb_encode(tfs),
-        block_first_doc=firsts,
-        block_last_doc=lasts,
-        block_max_tf=max_tf,
-        block_min_dl=min_dl,
+        n=int(b.n[0]),
+        doc_bytes=b.doc_bytes[0].as_py(),
+        tf_bytes=b.tf_bytes[0].as_py(),
+        block_first_doc=b.block_first_doc.values.to_numpy(),
+        block_last_doc=b.block_last_doc.values.to_numpy(),
+        block_max_tf=b.block_max_tf.values.to_numpy(),
+        block_min_dl=b.block_min_dl.values.to_numpy(),
     )
 
 
@@ -206,13 +361,10 @@ def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> bytes:
     flat_pos = np.ascontiguousarray(flat_pos, dtype=np.uint32)
     if flat_pos.size == 0:
         return b""
-    d = np.empty_like(flat_pos)
-    d[0] = flat_pos[0]
-    d[1:] = flat_pos[1:] - flat_pos[:-1]
-    seg = np.asarray(tfs, dtype=np.int64)
-    starts = np.cumsum(seg[:-1])
-    d[starts] = flat_pos[starts]  # reset: absolute first position per posting
-    return svb_encode(d)
+    tfs = np.asarray(tfs)
+    ids = np.arange(tfs.size, dtype=np.uint32)
+    b = encode_postings_batch(ids, tfs, np.array([0, tfs.size]), positions=flat_pos)
+    return b.pos_bytes[0].as_py()
 
 
 def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:

@@ -22,16 +22,23 @@ Design (scale-first):
   (factorize + run-length tf), emitting one uint32-packed row per
   (batch, shard, term) — ~200x fewer exchange rows than a per-token
   shuffle; doc lengths ride the same pass as sentinel runs, so the corpus
-  is tokenized exactly once. A run-merge encoder k-way merges sorted runs
-  per (shard, term). The tf/occurrence-row paths (``build_segments``) are
+  is tokenized exactly once. A run-merge encoder merges the sorted runs of
+  every (shard, term). The tf/occurrence-row paths (``build_segments``) are
   kept for staged-chunk resume and as independent cross-checks.
-* **Compression** inside ``mapInPandas``: per (term, shard) the sorted doc
-  ids are delta + Stream-VByte encoded (codec.py, vectorized NumPy) with
-  per-128-doc block-max metadata for BMW pruning (I3).
+* **Batch kernels, no per-term Python**: the partial builder and both
+  encoders are ``mapInArrow`` bodies. The builder cuts all of a batch's runs
+  from flat arrays by offsets; an encoder reads a batch's packed runs
+  straight from the Arrow buffers and encodes every (shard, term) group of
+  the batch in ONE :func:`~..codec.encode_postings_batch` call (segmented
+  sort, delta, Stream VByte and block-max ``reduceat``), so per-batch cost
+  is a handful of NumPy passes whatever the number of terms.
+* **Compression**: per (term, shard) the sorted doc ids are delta +
+  Stream-VByte encoded (codec.py, vectorized NumPy) with per-128-doc
+  block-max metadata for BMW pruning (I3).
 * **Segment layout** (all Parquet; atomic commit via manifest.json last, I7):
 
       index_dir/
-        manifest.json                 # commit point: config + stats + paths
+        manifest.json                 # commit point: config + stats (no wall time)
         docs/         doc_id, orig_id, dl, shard      (partitioned by shard)
         terms/        term, df, cf                     (global term stats)
         postings/     shard=K/ term, n, doc_bytes, tf_bytes,
@@ -50,6 +57,7 @@ Design (scale-first):
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import os
@@ -60,18 +68,33 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fscommit import COMMIT_FS
-from ..codec import BLOCK_SIZE, encode_positions, encode_postings
+from ..codec import BLOCK_SIZE, binary_array, encode_postings_batch
 from ..functions.tokenizer import tokens_col
 
 POSTINGS_SCHEMA = (
-    "term string, n long, cf long, doc_bytes binary, tf_bytes binary, "
+    "shard int, term string, n long, cf long, doc_bytes binary, tf_bytes binary, "
     "block_first_doc array<long>, block_last_doc array<long>, block_max_tf array<int>, "
     "block_min_dl array<int>, pos_bytes binary"
 )
+POSTINGS_COLS = [
+    "n", "cf", "doc_bytes", "tf_bytes", "block_first_doc", "block_last_doc",
+    "block_max_tf", "block_min_dl", "pos_bytes",
+]
+
+
+def write_manifest(tmp: str, manifest: dict[str, Any], t0: float) -> dict[str, Any]:
+    """Write ``manifest.json`` (the commit point) into ``tmp`` and return it
+    with ``built_wall_s`` added. The wall time stays out of the file, so
+    two builds of one corpus write byte-identical manifests."""
+    with open(os.path.join(tmp, "manifest.json"), "w") as fh:
+        json.dump(manifest, fh, indent=1)
+    return {**manifest, "built_wall_s": round(time.time() - t0, 3)}
 
 
 def _shard_dl_dense(docs_dir: str, shard: int, id_space: int, n_shards: int) -> np.ndarray:
@@ -151,10 +174,131 @@ def shard_start(shard: int, id_space: int, n_shards: int) -> int:
     return -(-shard * id_space // n_shards)
 
 
+def _shard_bases(shards: np.ndarray, id_space: int, n_shards: int) -> np.ndarray:
+    """``shard_start`` of every entry of ``shards`` (exact integer math,
+    one Python call per DISTINCT shard)."""
+    uniq, inv = np.unique(shards, return_inverse=True)
+    return np.array([shard_start(int(s), id_space, n_shards) for s in uniq], dtype=np.int64)[inv]
+
+
+def _u32_runs(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Flat uint32 values and per-row value counts of a binary column of
+    packed uint32 runs, read straight from its Arrow buffers (32- or 64-bit
+    offsets, whichever Arrow delivers) — no per-row ``bytes`` objects."""
+    otype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, obuf, dbuf = col.buffers()
+    offs = np.frombuffer(obuf, dtype=otype)[col.offset : col.offset + len(col) + 1].astype(np.int64)
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    return data[offs[0] : offs[-1]].view(np.uint32), np.diff(offs) // 4
+
+
+def _u32_binary(offsets: np.ndarray, values: np.ndarray) -> pa.BinaryArray:
+    """Binary column whose row i packs ``values[offsets[i]:offsets[i+1]]``
+    as uint32 (the packed-run format of PARTIAL_SCHEMA)."""
+    data = np.ascontiguousarray(values, dtype=np.uint32).view(np.uint8)
+    return binary_array(np.asarray(offsets) * 4, data)
+
+
+def _group_starts(batch: pa.RecordBatch, keys: list[str]) -> np.ndarray:
+    """Row index where each run of equal ``keys`` values starts (the batch
+    is sorted by ``keys``)."""
+    n = batch.num_rows
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for k in keys:
+        col = batch.column(k)
+        change |= pc.not_equal(col.slice(1), col.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+    return np.concatenate([[0], np.flatnonzero(change) + 1]).astype(np.int64)
+
+
+def _whole_groups(
+    batches: Iterator[pa.RecordBatch], keys: list[str]
+) -> Iterator[tuple[pa.RecordBatch, np.ndarray]]:
+    """Re-cut a ``keys``-sorted batch stream so no group spans two batches:
+    each batch's trailing group is held back and prepended to the next.
+    Yields each batch of whole groups with its group start rows."""
+    carry: pa.RecordBatch | None = None
+    for batch in batches:
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+        if batch.num_rows == 0:
+            continue
+        starts = _group_starts(batch, keys)
+        tail = int(starts[-1])
+        carry = batch.slice(tail)
+        if tail:
+            yield batch.slice(0, tail), starts[:-1]
+    if carry is not None and carry.num_rows:
+        yield carry, np.zeros(1, dtype=np.int64)
+
+
+def _postings_batch(
+    batch: pa.RecordBatch,
+    keys: list[str],
+    starts: np.ndarray,
+    ids: np.ndarray,
+    tfs: np.ndarray,
+    offsets: np.ndarray,
+    dl_of,
+    id_space: int,
+    n_shards: int,
+    positions: np.ndarray | None = None,
+    has_pos: np.ndarray | None = None,
+) -> pa.RecordBatch:
+    """Encode one batch of whole ``keys`` groups (shard-local ``ids``,
+    group ``offsets``) with :func:`encode_postings_batch` and return the
+    POSTINGS_SCHEMA rows, key columns first. ``dl_of(route, shard, ids,
+    offsets)`` gives each posting's doc length (route is None unless the
+    keys lead with it)."""
+    group_keys = {k: batch.column(k).take(starts) for k in keys}
+    shard = group_keys["shard"].to_numpy()
+    route = group_keys["route"].to_numpy() if "route" in group_keys else None
+    enc = encode_postings_batch(
+        ids,
+        tfs,
+        offsets,
+        dl_of(route, shard, ids, offsets),
+        positions,
+        has_pos,
+        bases=_shard_bases(shard, id_space, n_shards),
+    )
+    return pa.RecordBatch.from_arrays(
+        [*group_keys.values(), pa.array(enc.n), pa.array(enc.cf), enc.doc_bytes, enc.tf_bytes,
+         enc.block_first_doc, enc.block_last_doc, enc.block_max_tf, enc.block_min_dl,
+         enc.pos_bytes],
+        names=[*keys, *POSTINGS_COLS],
+    )
+
+
+def _dense_dl_reader(id_space: int, n_shards: int, docs_dir: str | None):
+    """``dl_of`` for :func:`_postings_batch`: each posting's doc length from
+    the dense per-shard ``dl`` array of the already-written docs table
+    (``docs_dir/route=<r>`` per route for a routed build), or None without
+    ``docs_dir``. Each array is read once per task and indexed once per
+    shard present in a batch."""
+    cache: dict[tuple, np.ndarray] = {}
+
+    def dl_of(route, shard: np.ndarray, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray | None:
+        if docs_dir is None:
+            return None
+        part = shard.astype(np.int64) + (0 if route is None else route.astype(np.int64) * n_shards)
+        per_posting = np.repeat(part, np.diff(offsets))
+        dls = np.empty(ids.size, dtype=np.int64)
+        for key in np.unique(part):
+            r, sh = divmod(int(key), n_shards)
+            ddir = docs_dir if route is None else f"{docs_dir}/route={r}"
+            if (ddir, sh) not in cache:
+                cache[(ddir, sh)] = _shard_dl_dense(ddir, sh, id_space, n_shards)
+            m = per_posting == key
+            dls[m] = cache[(ddir, sh)][ids[m]]
+        return dls
+
+    return dl_of
+
+
 def _make_encode_partition(
     id_space: int, n_shards: int, occurrences: bool = False, docs_dir: str | None = None
 ):
-    """mapInPandas body factory: partition is hash-partitioned by
+    """mapInArrow body factory: partition is hash-partitioned by
     (shard, term) and sorted by (shard, term, doc_id); encode each group's
     postings. Doc ids are stored SHARD-LOCAL (minus shard_start) so the
     uint32 codec holds as long as a single shard stays under 2^32 docs —
@@ -166,80 +310,33 @@ def _make_encode_partition(
     single-shuffle build path (the (doc_id, term) pre-aggregation shuffle is
     skipped entirely).
 
-    Single pass, no per-group Spark overhead; carries incomplete trailing
-    groups across Arrow batches so group boundaries never split.
-    """
+    Each batch of whole groups is one :func:`encode_postings_batch` call;
+    incomplete trailing groups carry across Arrow batches."""
+    keys = ["shard", "term"]
+    dl_of = _dense_dl_reader(id_space, n_shards, docs_dir)
 
-    dl_cache: dict[int, np.ndarray] = {}
-
-    def _shard_dls(shard: int) -> np.ndarray | None:
-        if docs_dir is None:
-            return None
-        if shard not in dl_cache:
-            dl_cache[shard] = _shard_dl_dense(docs_dir, shard, id_space, n_shards)
-        return dl_cache[shard]
-
-    def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = pdf["term"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = None if occurrences else pdf["tf"].to_numpy(dtype=np.int64)
-        change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate([[0], change])
-        ends = np.concatenate([change, [len(pdf)]])
-        rows: list[dict[str, Any]] = []
-        for s, e in zip(starts, ends):
-            key = terms[s]
-            shard = int(key.split("\x00", 1)[0])
-            base = shard_start(shard, id_space, n_shards)
-            ids = doc_ids[s:e]
+    def _encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, starts in _whole_groups(batches, keys):
+            doc_ids = batch.column("doc_id").to_numpy()
+            n = len(doc_ids)
             if occurrences:
                 # run-length over sorted (possibly repeated) doc ids -> tf
-                dchange = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-                dstarts = np.concatenate([[0], dchange])
-                fs = np.diff(np.concatenate([dstarts, [len(ids)]])).astype(np.uint32)
-                ids = ids[dstarts]
+                new = np.ones(n, dtype=bool)
+                new[1:] = doc_ids[1:] != doc_ids[:-1]
+                new[starts] = True
+                post = np.flatnonzero(new)
+                tfs = np.diff(np.append(post, n))
+                offsets = np.searchsorted(post, np.append(starts, n))
+                doc_ids = doc_ids[post]
             else:
-                fs = tfs[s:e].astype(np.uint32)
-            local = (ids - base).astype(np.uint32)
-            dl_dense = _shard_dls(shard)
-            enc = encode_postings(
-                local, fs, None if dl_dense is None else dl_dense[local]
+                tfs = batch.column("tf").to_numpy()
+                offsets = np.append(starts, n)
+            shard = batch.column("shard").to_numpy()[starts]
+            local = doc_ids - np.repeat(_shard_bases(shard, id_space, n_shards), np.diff(offsets))
+            yield _postings_batch(
+                batch, keys, starts, local.astype(np.uint32), tfs, offsets,
+                dl_of, id_space, n_shards,
             )
-            rows.append(
-                {
-                    "term": key,
-                    "n": int(enc.n),
-                    "cf": int(fs.sum()),
-                    "doc_bytes": enc.doc_bytes,
-                    "tf_bytes": enc.tf_bytes,
-                    "block_first_doc": (enc.block_first_doc + base).tolist(),
-                    "block_last_doc": (enc.block_last_doc + base).tolist(),
-                    "block_max_tf": enc.block_max_tf.tolist(),
-                    "block_min_dl": enc.block_min_dl.tolist(),
-                    "pos_bytes": b"",  # tf/occurrence path stores freqs only
-                }
-            )
-        return pd.DataFrame(rows)
-
-    def _encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the final group — it may continue in the next batch
-            last_term = pdf["term"].iloc[-1]
-            tail_mask = pdf["term"].to_numpy() == last_term
-            first_tail = len(pdf) - int(
-                tail_mask[::-1].argmin() if not tail_mask.all() else len(pdf)
-            )
-            carry = pdf.iloc[first_tail:].reset_index(drop=True)
-            head = pdf.iloc[:first_tail]
-            if len(head):
-                yield _encode_groups(head)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry)
 
     return _encode_partition
 
@@ -256,13 +353,14 @@ def _make_encode_partition(
 # ---------------------------------------------------------------------------
 
 PARTIAL_SCHEMA = "shard int, term string, run_min long, ids binary, tfs binary, pos binary"
+PARTIAL_COLS = ["shard", "term", "run_min", "ids", "tfs", "pos"]
 DL_TERM = ""  # sentinel term for doc-length runs ('' can never be a token)
 
 
 def _make_partial_builder(
     id_space: int, n_shards: int, id_col: str, text_col: str, store_positions: bool = False
 ):
-    """mapInPandas body: per Arrow batch, tokenize (pre-compiled regex,
+    """mapInArrow body: per Arrow batch, tokenize (pre-compiled regex,
     vectorized pandas) and emit packed posting runs + a doc-length run per
     shard. Doc ids inside a run are SHARD-LOCAL uint32 ascending; ``run_min``
     (global) orders runs at merge time.
@@ -272,112 +370,93 @@ def _make_partial_builder(
     sort preserves occurrence order, so a group's occurrence slice IS its
     concatenated positions stream); default off — freqs-only, the BM25
     contract needs no positions and the stream costs index bytes."""
-    from ..functions.tokenizer import tokenize_series
 
-    cols = ["shard", "term", "run_min", "ids", "tfs", "pos"]
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            doc_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            order = np.argsort(doc_ids, kind="stable")
-            doc_ids = doc_ids[order]
-            toks = tokenize_series(pdf[text_col].iloc[order])
-            rows = _batch_partial_rows(
-                doc_ids, toks, id_space, n_shards, store_positions
-            )
-            yield pd.DataFrame(rows, columns=cols)
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield _batch_partial_runs(
+                    batch, id_col, text_col, id_space, n_shards, store_positions
+                )
 
     return build
 
 
-def _batch_partial_rows(
-    doc_ids: np.ndarray,
-    toks: list[list[str]],
+def _batch_partial_runs(
+    batch: pa.RecordBatch,
+    id_col: str,
+    text_col: str,
     id_space: int,
     n_shards: int,
     store_positions: bool,
-) -> list[tuple]:
-    """Packed posting runs + per-shard doc-length runs for ONE sorted batch
-    (doc_ids ascending, toks aligned). The kernel shared by the single-field
-    and multi-field partial builders; see :func:`_make_partial_builder`."""
+) -> pa.RecordBatch:
+    """Packed posting runs + per-shard doc-length runs (PARTIAL_SCHEMA) for
+    ONE input batch: the kernel shared by the single-field, multi-field and
+    routed partial builders; see :func:`_make_partial_builder`. Every
+    column is cut from flat arrays by offsets — no per-term Python."""
+    from ..functions.tokenizer import tokenize_series
+
+    doc_ids = batch.column(id_col).to_numpy()
+    order = np.argsort(doc_ids, kind="stable")
+    doc_ids = doc_ids[order]
+    toks = tokenize_series(batch.column(text_col).to_pandas().iloc[order])
     n = len(doc_ids)
-    lens = np.fromiter((len(t) for t in toks), count=n, dtype=np.int64)
+    lens = np.fromiter(map(len, toks), count=n, dtype=np.int64)
     shards = doc_ids * n_shards // id_space
-    rows: list[tuple] = []
-    # doc-length runs, one per shard present in the batch
-    for sh in np.unique(shards):
-        m = shards == sh
-        base = shard_start(int(sh), id_space, n_shards)
-        rows.append(
-            (
-                int(sh),
-                DL_TERM,
-                int(doc_ids[m][0]),
-                (doc_ids[m] - base).astype(np.uint32).tobytes(),
-                lens[m].astype(np.uint32).tobytes(),
-                b"",
-            )
-        )
+    local = (doc_ids - _shard_bases(shards, id_space, n_shards)).astype(np.uint32)
+    # doc-length runs: ids ascend, so each shard's docs are one run
+    dl_off = np.append(np.flatnonzero(np.diff(shards, prepend=-1)), n)
     total = int(lens.sum())
+    codes = np.empty(0, dtype=np.int64)
+    uniq_terms: Any = np.empty(0, dtype=object)
     if total:
-        flat = np.empty(total, dtype=object)
-        pos = 0
-        for t in toks:
-            if t:
-                flat[pos : pos + len(t)] = t
-                pos += len(t)
+        flat = np.fromiter(itertools.chain.from_iterable(toks), dtype=object, count=total)
         codes, uniq_terms = pd.factorize(flat)
-        didx = np.repeat(np.arange(n), lens)
-        # sort by (term, doc): codes*n+didx is unique per (term, doc-pos)
-        pair = codes.astype(np.int64) * n + didx
-        if store_positions:
-            # occurrence position within its doc, aligned with flat
-            pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(
-                np.concatenate([[0], np.cumsum(lens[:-1])]), lens
-            )
-            order_occ = np.argsort(pair, kind="stable")
-            sp = pair[order_occ]
-            pos_sorted = pos_in_doc[order_occ]
-        else:
-            sp = np.sort(pair, kind="stable")
-        change = np.flatnonzero(sp[1:] != sp[:-1]) + 1
-        starts = np.concatenate([[0], change])
-        tf = np.diff(np.concatenate([starts, [len(sp)]])).astype(np.uint32)
-        occ_ends = np.concatenate([starts[1:], [len(sp)]])
-        u_pair = sp[starts]
-        u_code = u_pair // n
-        u_didx = u_pair % n
-        u_doc = doc_ids[u_didx]
-        u_shard = shards[u_didx]
-        gchange = (
-            np.flatnonzero((u_code[1:] != u_code[:-1]) | (u_shard[1:] != u_shard[:-1])) + 1
-        )
-        gs = np.concatenate([[0], gchange])
-        ge = np.concatenate([gchange, [len(u_code)]])
-        for s, e in zip(gs, ge):
-            sh = int(u_shard[s])
-            base = shard_start(sh, id_space, n_shards)
-            rows.append(
-                (
-                    sh,
-                    uniq_terms[u_code[s]],
-                    int(u_doc[s]),
-                    (u_doc[s:e] - base).astype(np.uint32).tobytes(),
-                    tf[s:e].tobytes(),
-                    pos_sorted[starts[s] : occ_ends[e - 1]]
-                    .astype(np.uint32)
-                    .tobytes()
-                    if store_positions
-                    else b"",
-                )
-            )
-    return rows
+    didx = np.repeat(np.arange(n), lens)
+    # sort by (term, doc): codes*n+didx is unique per (term, doc-pos)
+    pair = codes.astype(np.int64) * n + didx
+    if store_positions:
+        order_occ = np.argsort(pair, kind="stable")
+        sp = pair[order_occ]
+    else:
+        sp = np.sort(pair, kind="stable")
+    starts = np.flatnonzero(np.diff(sp, prepend=-1))  # one per (term, doc) posting
+    tf = np.diff(np.append(starts, total)).astype(np.uint32)
+    u_code = sp[starts] // n
+    u_didx = sp[starts] % n
+    u_shard = shards[u_didx]
+    # one run per (term, shard): (term, doc) order keeps a term's shards apart
+    gs = np.flatnonzero((np.diff(u_code, prepend=-1) != 0) | (np.diff(u_shard, prepend=-1) != 0))
+    n_dl, n_runs = len(dl_off) - 1, len(gs)
+    ids_off = np.concatenate([dl_off, n + np.append(gs, len(starts))[1:]])
+    if store_positions:
+        # occurrence position within its doc, in (term, doc) order
+        pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
+        pos = pos_in_doc[order_occ]
+        pos_off = np.append(np.zeros(n_dl, np.int64), np.append(starts[gs], total))
+    else:
+        pos, pos_off = np.empty(0, np.int64), np.zeros(n_dl + n_runs + 1, np.int64)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.concatenate([shards[dl_off[:-1]], u_shard[gs]]).astype(np.int32)),
+            pa.concat_arrays(
+                [pa.array([DL_TERM] * n_dl, pa.string()), pa.array(uniq_terms[u_code[gs]], pa.string())]
+            ),
+            pa.array(np.concatenate([doc_ids[dl_off[:-1]], doc_ids[u_didx[gs]]])),
+            _u32_binary(ids_off, np.concatenate([local, local[u_didx]])),
+            _u32_binary(ids_off, np.concatenate([lens, tf])),
+            _u32_binary(pos_off, pos),
+        ],
+        names=PARTIAL_COLS,
+    )
 
 
 MULTI_PARTIAL_SCHEMA = "field string, " + PARTIAL_SCHEMA
+
+
+def _prepend(batch: pa.RecordBatch, name: str, value: Any, type_: pa.DataType) -> pa.RecordBatch:
+    """``batch`` with a constant leading column."""
+    col = pa.array(np.full(batch.num_rows, value, dtype=object), type_)
+    return pa.RecordBatch.from_arrays([col, *batch.columns], names=[name, *batch.schema.names])
 
 
 def _make_partial_builder_multi(
@@ -393,28 +472,14 @@ def _make_partial_builder_multi(
     The field dimension then becomes a directory partition downstream —
     Lucene's per-field postings + norms realized as ``field=<f>/`` subtrees,
     so a query on one field never reads another field's postings."""
-    from ..functions.tokenizer import tokenize_series
 
-    cols = ["field", "shard", "term", "run_min", "ids", "tfs", "pos"]
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            doc_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            order = np.argsort(doc_ids, kind="stable")
-            doc_ids = doc_ids[order]
-            rows: list[tuple] = []
             for f in fields:
-                toks = tokenize_series(pdf[f].iloc[order])
-                rows.extend(
-                    (f, *r)
-                    for r in _batch_partial_rows(
-                        doc_ids, toks, id_space, n_shards, store_positions
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+                runs = _batch_partial_runs(batch, id_col, f, id_space, n_shards, store_positions)
+                yield _prepend(runs, "field", f, pa.string())
 
     return build
 
@@ -422,99 +487,38 @@ def _make_partial_builder_multi(
 def _make_run_merge_encoder(
     id_space: int, n_shards: int, docs_dir: str | None = None, routed: bool = False
 ):
-    """mapInPandas body: input hash-partitioned by (shard, term) and sorted
-    by (shard, term, run_min); key column is 'shard\\x00term' — or
-    'route\\x00shard\\x00term' with ``routed=True``, in which case each
-    group's doc lengths are read from ``docs_dir/route=<r>`` (the routed
-    build rides the SAME single-exchange kernel with route as a leading key;
-    plans/routing.py). Merges each group's runs (ordered concat; stable
-    argsort fallback if ranges ever interleave) and block-encodes. Carries
-    the trailing group across Arrow batches like the occurrence encoder."""
+    """mapInArrow body: input (PARTIAL_SCHEMA, led by ``route`` when
+    ``routed``) hash-partitioned by (shard, term) and sorted by (shard, term,
+    run_min); output POSTINGS_SCHEMA (``route int, `` + it when routed). With
+    ``routed=True`` each group's doc lengths are read from
+    ``docs_dir/route=<r>`` (the routed build rides the SAME single-exchange
+    kernel with route as a leading key; plans/routing.py).
 
-    dl_cache: dict[tuple, np.ndarray] = {}
+    Each batch of whole groups is ONE :func:`encode_postings_batch` call:
+    the runs' packed ids/tfs/positions are read as flat arrays straight from
+    the Arrow buffers, and the kernel's segmented sort merges runs whose
+    doc ranges interleave. The trailing group carries across batches."""
+    keys = ["route", "shard", "term"] if routed else ["shard", "term"]
+    dl_of = _dense_dl_reader(id_space, n_shards, docs_dir)
 
-    def _shard_dls(ddir: str | None, shard: int) -> np.ndarray | None:
-        if ddir is None:
-            return None
-        key = (ddir, shard)
-        if key not in dl_cache:
-            dl_cache[key] = _shard_dl_dense(ddir, shard, id_space, n_shards)
-        return dl_cache[key]
-
-    def _merge_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["term"].to_numpy()
-        change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-        starts = np.concatenate([[0], change])
-        ends = np.concatenate([change, [len(pdf)]])
-        rows: list[dict[str, Any]] = []
-        for s, e in zip(starts, ends):
-            key = keys[s]
-            if routed:
-                route_s, shard_s = key.split("\x00", 2)[:2]
-                shard = int(shard_s)
-                ddir = None if docs_dir is None else f"{docs_dir}/route={int(route_s)}"
-            else:
-                shard = int(key.split("\x00", 1)[0])
-                ddir = docs_dir
-            base = shard_start(shard, id_space, n_shards)
-            ids = np.concatenate(
-                [np.frombuffer(b, dtype=np.uint32) for b in pdf["ids"].iloc[s:e]]
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, starts in _whole_groups(batches, keys):
+            rows = np.append(starts, batch.num_rows)
+            ids, per_run = _u32_runs(batch.column("ids"))
+            tfs, _ = _u32_runs(batch.column("tfs"))
+            pos, pos_per_run = _u32_runs(batch.column("pos"))
+            offsets = np.append(0, np.cumsum(per_run))[rows]
+            # a group keeps positions only if every occurrence has one
+            n_pos = np.diff(np.append(0, np.cumsum(pos_per_run))[rows])
+            cf = np.diff(np.append(0, np.cumsum(tfs, dtype=np.int64))[offsets])
+            has_pos = (n_pos == cf) & (n_pos > 0)
+            if not has_pos.all():
+                group = np.repeat(np.arange(len(starts)), np.diff(rows))
+                pos = pos[np.repeat(has_pos[group], pos_per_run)]
+            yield _postings_batch(
+                batch, keys, starts, ids, tfs, offsets, dl_of, id_space, n_shards,
+                pos if has_pos.any() else None, has_pos,
             )
-            fs = np.concatenate(
-                [np.frombuffer(b, dtype=np.uint32) for b in pdf["tfs"].iloc[s:e]]
-            )
-            poscat = np.concatenate(
-                [np.frombuffer(b, dtype=np.uint32) for b in pdf["pos"].iloc[s:e]]
-            )
-            has_pos = len(poscat) == int(fs.sum()) and len(poscat) > 0
-            if e - s > 1 and not (ids[1:] > ids[:-1]).all():
-                o = np.argsort(ids, kind="stable")
-                if has_pos:
-                    # positions are per-posting segments aligned with the
-                    # pre-sort posting order: permute segments with it
-                    bounds = np.concatenate([[0], np.cumsum(fs.astype(np.int64))])
-                    poscat = np.concatenate(
-                        [poscat[bounds[i] : bounds[i + 1]] for i in o]
-                    )
-                ids, fs = ids[o], fs[o]
-            dl_dense = _shard_dls(ddir, shard)
-            enc = encode_postings(
-                ids, fs, None if dl_dense is None else dl_dense[ids]
-            )
-            rows.append(
-                {
-                    "term": key,
-                    "n": int(enc.n),
-                    "cf": int(fs.sum()),
-                    "doc_bytes": enc.doc_bytes,
-                    "tf_bytes": enc.tf_bytes,
-                    "block_first_doc": (enc.block_first_doc + base).tolist(),
-                    "block_last_doc": (enc.block_last_doc + base).tolist(),
-                    "block_max_tf": enc.block_max_tf.tolist(),
-                    "block_min_dl": enc.block_min_dl.tolist(),
-                    "pos_bytes": encode_positions(poscat, fs) if has_pos else b"",
-                }
-            )
-        return pd.DataFrame(rows)
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_key = pdf["term"].iloc[-1]
-            tail_mask = pdf["term"].to_numpy() == last_key
-            first_tail = len(pdf) - int(
-                tail_mask[::-1].argmin() if not tail_mask.all() else len(pdf)
-            )
-            carry = pdf.iloc[first_tail:].reset_index(drop=True)
-            head = pdf.iloc[:first_tail]
-            if len(head):
-                yield _merge_groups(head)
-        if carry is not None and len(carry):
-            yield _merge_groups(carry)
 
     return merge
 
@@ -555,7 +559,7 @@ def build_segments_partial(
 
     partials = (
         docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text"))
-        .mapInPandas(
+        .mapInArrow(
             _make_partial_builder(id_space, n_shards, "doc_id", "text", store_positions),
             PARTIAL_SCHEMA,
         )
@@ -619,23 +623,7 @@ def _finalize_from_partials(
         partials.where(F.col("term") != DL_TERM)
         .repartition(nparts, "shard", "term")
         .sortWithinPartitions("shard", "term", "run_min")
-        .withColumn("term", F.concat_ws("\x00", F.col("shard").cast("string"), F.col("term")))
-        .select("term", "run_min", "ids", "tfs", "pos")
-        .mapInPandas(_make_run_merge_encoder(id_space, n_shards, docs_dir=f"{tmp}/docs"), POSTINGS_SCHEMA)
-        .withColumn("split", F.split("term", "\x00", 2))
-        .select(
-            F.element_at("split", 1).cast("int").alias("shard"),
-            F.element_at("split", 2).alias("term"),
-            "n",
-            "cf",
-            "doc_bytes",
-            "tf_bytes",
-            "block_first_doc",
-            "block_last_doc",
-            "block_max_tf",
-            "block_min_dl",
-            "pos_bytes",
-        )
+        .mapInArrow(_make_run_merge_encoder(id_space, n_shards, docs_dir=f"{tmp}/docs"), POSTINGS_SCHEMA)
     )
     (
         encoded.repartition(n_shards, "shard")
@@ -684,11 +672,8 @@ def _finalize_from_partials(
         "positions": bool(store_positions),
         "postings_per_shard": per_shard,
         "shard_skew_max_over_median": skew,
-        "built_wall_s": round(time.time() - t0, 3),
     }
-    with open(f"{tmp}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    return manifest
+    return write_manifest(tmp, manifest, t0)
 
 
 def build_multifield_index(
@@ -740,7 +725,7 @@ def build_multifield_index(
 
     partials = (
         docs.select(F.col(id_col).cast("long").alias("doc_id"), *fields)
-        .mapInPandas(
+        .mapInArrow(
             _make_partial_builder_multi(
                 id_space, n_shards, "doc_id", fields, store_positions
             ),
@@ -774,10 +759,8 @@ def build_multifield_index(
         "block_size": BLOCK_SIZE,
         "positions": bool(store_positions),
         "per_field": per_field,
-        "built_wall_s": round(time.time() - t0, 3),
     }
-    with open(f"{tmp}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=1)
+    manifest = write_manifest(tmp, manifest, t0)
     COMMIT_FS.publish(tmp, index_dir)
     return manifest
 
@@ -837,29 +820,14 @@ def build_segments(
         "shard", F.expr(f"CAST((doc_id * {n_shards}) DIV {id_space} AS INT)")
     )
     nparts = max(n_shards, 2 * spark.sparkContext.defaultParallelism)
-    cols = ["term", "doc_id"] + ([] if occurrences else ["tf"])
+    cols = ["shard", "term", "doc_id"] + ([] if occurrences else ["tf"])
     encoded = (
         sharded.repartition(nparts, "shard", "term")
         .sortWithinPartitions("shard", "term", "doc_id")
-        .withColumn("term", F.concat_ws("\x00", F.col("shard").cast("string"), F.col("term")))
         .select(*cols)
-        .mapInPandas(
+        .mapInArrow(
             _make_encode_partition(id_space, n_shards, occurrences, docs_dir=f"{tmp}/docs"),
             POSTINGS_SCHEMA,
-        )
-        .withColumn("split", F.split("term", "\x00", 2))
-        .select(
-            F.element_at("split", 1).cast("int").alias("shard"),
-            F.element_at("split", 2).alias("term"),
-            "n",
-            "cf",
-            "doc_bytes",
-            "tf_bytes",
-            "block_first_doc",
-            "block_last_doc",
-            "block_max_tf",
-            "block_min_dl",
-            "pos_bytes",
         )
     )
     (
@@ -889,10 +857,8 @@ def build_segments(
         "id_space": id_space,
         "n_shards": n_shards,
         "block_size": BLOCK_SIZE,
-        "built_wall_s": round(time.time() - t0, 3),
     }
-    with open(f"{tmp}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=1)
+    manifest = write_manifest(tmp, manifest, t0)
     # commit: manifest written last inside tmp, then one publish swap
     COMMIT_FS.publish(tmp, index_dir)
     return manifest

@@ -45,6 +45,7 @@ from .build_index import (
     POSTINGS_SCHEMA,
     _make_run_merge_encoder,
     shard_start,
+    write_manifest,
 )
 
 
@@ -250,25 +251,9 @@ def merge_indexes(
         )
         .repartition(nparts, "shard", "term")
         .sortWithinPartitions("shard", "term", "run_min")
-        .withColumn("term", F.concat_ws("\x00", F.col("shard").cast("string"), F.col("term")))
-        .select("term", "run_min", "ids", "tfs", "pos")
-        .mapInPandas(
+        .mapInArrow(
             _make_run_merge_encoder(id_space, n_shards_v, docs_dir=f"{tmp}/docs"),
             POSTINGS_SCHEMA,
-        )
-        .withColumn("split", F.split("term", "\x00", 2))
-        .select(
-            F.element_at("split", 1).cast("int").alias("shard"),
-            F.element_at("split", 2).alias("term"),
-            "n",
-            "cf",
-            "doc_bytes",
-            "tf_bytes",
-            "block_first_doc",
-            "block_last_doc",
-            "block_max_tf",
-            "block_min_dl",
-            "pos_bytes",
         )
     )
     (
@@ -296,10 +281,8 @@ def merge_indexes(
         "positions": merged_positional,
         "merged_generations": len(index_dirs),
         "tombstoned_docs": int(len(dead_ids)) if dead_ids is not None else 0,
-        "built_wall_s": round(time.time() - t0, 3),
     }
-    with open(f"{tmp}/manifest.json", "w") as fh:
-        json.dump(manifest, fh, indent=1)
+    manifest = write_manifest(tmp, manifest, t0)
     COMMIT_FS.publish(tmp, out_dir)
     return manifest
 

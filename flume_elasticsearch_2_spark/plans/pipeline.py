@@ -111,8 +111,11 @@ def index_webpages(
     t_prepare = time.time()
 
     orig = with_ids.select("doc_id", F.col("url").alias("orig_id"))
+    # assign_doc_ids gives dense ids 0..n_docs-1, so the id space is known
+    # without a max() pass over the corpus
     manifest = build_segments_partial(
-        spark, with_ids, index_dir, n_shards, orig_ids=orig, id_col="doc_id", text_col="text"
+        spark, with_ids, index_dir, n_shards, orig_ids=orig, id_col="doc_id",
+        text_col="text", id_space=max(n_docs, 1),
     )
     with_ids.unpersist()
     t_done = time.time()

@@ -2479,7 +2479,7 @@ class IndexSearcher:
                 "n long",
             ).collect()
             n = sum(r["n"] for r in rows)
-        return self.spark.createDataFrame([(int(n),)], "n_matching long")
+        return _relation(self.spark, "n_matching long", pd.DataFrame({"n_matching": [int(n)]}))
 
     def count_terminated(
         self, query: str, terminate_after: int, mode: str = "or"
@@ -2505,9 +2505,15 @@ class IndexSearcher:
             return pd.DataFrame({"n": [min(m, cap)], "t": [int(m >= cap)]})
 
         rows = _scatter(self.spark, shards, count_shard, "n long, t int").collect()
-        return self.spark.createDataFrame(
-            [(sum(r["n"] for r in rows), max((r["t"] for r in rows), default=0))],
+        return _relation(
+            self.spark,
             "n_matching long, terminated_early int",
+            pd.DataFrame(
+                {
+                    "n_matching": [sum(r["n"] for r in rows)],
+                    "terminated_early": [max((r["t"] for r in rows), default=0)],
+                }
+            ),
         )
 
     def facet_query_count(
@@ -2523,12 +2529,13 @@ class IndexSearcher:
         where BOTH queries can match. ``query=None`` (match_all scope)
         degrades to :meth:`count` of the facet query. One long per shard
         crosses the wire; returns one row ``(count)``."""
-        out_one = lambda n: self.spark.createDataFrame(  # noqa: E731
-            [(int(n),)], "count long"
+        out_one = lambda n: _relation(  # noqa: E731
+            self.spark, "count long", pd.DataFrame({"count": [int(n)]})
         )
         if query is None:
-            n = self.count(facet_query, mode=facet_mode).collect()[0][0]
-            return out_one(n)
+            return self.count(facet_query, mode=facet_mode).withColumnRenamed(
+                "n_matching", "count"
+            )
         tq, tf_ = sorted(set(tokenize(query))), sorted(set(tokenize(facet_query)))
         meta = self._query_meta(sorted(set(tq + tf_))) if tq and tf_ else ({}, {})
         _, pq, sq = self._active_shards(tq, mode, meta)

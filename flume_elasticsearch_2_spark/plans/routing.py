@@ -59,41 +59,25 @@ def route_sql(field: str, n_routes: int) -> str:
 
 
 def _make_partial_builder_routed(id_space: int, n_shards: int, id_col: str):
-    """mapInPandas body: per Arrow batch, split rows by route and run the
-    SAME packed-run kernel (:func:`~.build_index._batch_partial_rows`) per
-    route subset, prepending the route to each row. Sharding is the global
+    """mapInArrow body: per Arrow batch, split rows by route and run the
+    SAME packed-run kernel (:func:`~.build_index._batch_partial_runs`) per
+    route subset, prepending the route column. Sharding is the global
     doc-range function, so shard-local id offsets are route-independent and
     the kernel needs no changes."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from ..functions.tokenizer import tokenize_series
-    from .build_index import _batch_partial_rows
-
-    cols = ["route", "shard", "term", "run_min", "ids", "tfs", "pos"]
+    from .build_index import _batch_partial_runs, _prepend
 
     def build(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            routes = pdf["__route"].to_numpy()
+        for batch in batches:
+            routes = batch.column("__route").to_numpy()
             for r in np.unique(routes):
-                sub = pdf[routes == r]
-                doc_ids = sub[id_col].to_numpy(dtype=np.int64)
-                order = np.argsort(doc_ids, kind="stable")
-                doc_ids = doc_ids[order]
-                toks = tokenize_series(sub["text"].iloc[order])
-                rows = _batch_partial_rows(
-                    doc_ids, toks, id_space, n_shards, store_positions=False
+                runs = _batch_partial_runs(
+                    batch.filter(pa.array(routes == r)), id_col, "text",
+                    id_space, n_shards, store_positions=False,
                 )
-                outs.append(
-                    pd.DataFrame(
-                        [(int(r), *row) for row in rows], columns=cols
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                yield _prepend(runs, "route", int(r), pa.int32())
 
     return build
 
@@ -139,6 +123,7 @@ def build_routed_index(
         _check_shard_span,
         _make_run_merge_encoder,
         shard_start,
+        write_manifest,
     )
 
     t0 = time.time()
@@ -166,7 +151,7 @@ def build_routed_index(
     stage = os.path.join(tmp, "_stage")
 
     partials = (
-        routed.mapInPandas(
+        routed.mapInArrow(
             _make_partial_builder_routed(id_space, n_shards, "doc_id"),
             "route int, " + PARTIAL_SCHEMA,
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -238,36 +223,11 @@ def build_routed_index(
         partials.where(F.col("term") != DL_TERM)
         .repartition(nparts, "route", "shard", "term")
         .sortWithinPartitions("route", "shard", "term", "run_min")
-        .withColumn(
-            "term",
-            F.concat_ws(
-                "\x00",
-                F.col("route").cast("string"),
-                F.col("shard").cast("string"),
-                F.col("term"),
-            ),
-        )
-        .select("term", "run_min", "ids", "tfs", "pos")
-        .mapInPandas(
+        .mapInArrow(
             _make_run_merge_encoder(
                 id_space, n_shards, docs_dir=f"{stage}/docs", routed=True
             ),
-            POSTINGS_SCHEMA,
-        )
-        .withColumn("split", F.split("term", "\x00", 3))
-        .select(
-            F.element_at("split", 1).cast("int").alias("route"),
-            F.element_at("split", 2).cast("int").alias("shard"),
-            F.element_at("split", 3).alias("term"),
-            "n",
-            "cf",
-            "doc_bytes",
-            "tf_bytes",
-            "block_first_doc",
-            "block_last_doc",
-            "block_max_tf",
-            "block_min_dl",
-            "pos_bytes",
+            "route int, " + POSTINGS_SCHEMA,
         )
     )
     (
@@ -333,11 +293,8 @@ def build_routed_index(
                 if per_shard
                 else 1.0
             ),
-            "built_wall_s": round(time.time() - t0, 3),
         }
-        with open(os.path.join(root, "manifest.json"), "w") as fh:
-            json.dump(m, fh, indent=1)
-        manifests[int(r)] = m
+        manifests[int(r)] = write_manifest(root, m, t0)
     COMMIT_FS.remove(stage)
 
     meta = {

@@ -104,3 +104,96 @@ def test_positions_roundtrip_property():
         assert np.array_equal(out, flat)
 
     check()
+
+
+def test_svb_golden_bytes():
+    """The Stream-VByte layout is an on-disk format: control bytes (2 bits
+    per value, first value in the low bits, last byte zero-padded), then
+    each value's little-endian bytes truncated to its length."""
+    v = np.array([0, 1, 255, 256, 65535, 65536, 2**24 - 1, 2**24, 2**32 - 1], dtype=np.uint32)
+    assert svb_encode(v).hex() == "40e9030001ff0001ffff000001ffffff00000001ffffffff"
+
+
+def test_encode_postings_batch_golden_bytes():
+    """Three groups, the first two interleaved runs, the second empty, the
+    third with a 3-byte delta and a 3-byte tf: each group pads its own
+    control bytes."""
+    from flume_elasticsearch_2_spark.codec import encode_postings_batch
+
+    b = encode_postings_batch(
+        np.array([5, 300, 7, 1 << 24, 2], np.uint32),
+        np.array([1, 2, 3, 1, 70000], np.uint32),
+        np.array([0, 3, 3, 5]),
+    )
+    assert [x.as_py().hex() for x in b.doc_bytes] == ["1005022501", "", "0802feffff"]
+    assert [x.as_py().hex() for x in b.tf_bytes] == ["00010302", "", "0270110101"]
+    assert b.n.tolist() == [3, 0, 2] and b.cf.tolist() == [6, 0, 70001]
+    assert b.block_first_doc.to_pylist() == [[5], [], [2]]
+    assert b.block_max_tf.to_pylist() == [[3], [], [70000]]
+
+
+_group = st.tuples(
+    st.one_of(
+        st.sampled_from([1, 127, 128, 129]),
+        st.integers(min_value=1, max_value=300),
+    ),
+    st.sampled_from([1 << 10, 1 << 24, 1 << 32]),  # id range: values >= 2^24 too
+    st.sampled_from([1, 2, 1 << 17]),  # tf range; 1 -> every tf is 1
+    st.integers(min_value=1, max_value=4),  # runs the group arrives in
+    st.integers(min_value=0, max_value=2**31),  # seed
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_group, min_size=1, max_size=8), st.booleans())
+def test_encode_postings_batch_property(groups, with_pos):
+    """Random batches of groups, each split into interleaved runs: every
+    group's bytes decode back to its sorted (ids, tfs, positions), and its
+    block first/last/max-tf/min-dl equal a brute-force per-block pass."""
+    from flume_elasticsearch_2_spark.codec import decode_positions, encode_postings_batch
+
+    want, ids_in, tfs_in, dls_in, pos_in, offsets = [], [], [], [], [], [0]
+    for size, id_hi, tf_hi, n_runs, seed in groups:
+        rng = np.random.default_rng(seed)
+        ids = np.unique(rng.integers(0, id_hi, size=size, dtype=np.uint64)).astype(np.uint32)
+        tfs = rng.integers(1, tf_hi, size=ids.size, endpoint=True).astype(np.uint32)
+        dls = rng.integers(1, 10_000, size=ids.size)
+        pos = []
+        if with_pos:
+            # min(tf, 3) distinct ascending positions per posting
+            tfs = np.minimum(tfs, 3)
+            pos = [np.sort(rng.choice(1 << 20, size=int(t), replace=False)).astype(np.uint32)
+                   for t in tfs]
+        want.append((ids, tfs, dls, pos))
+        # deal postings round-robin-at-random into runs, each run ascending
+        run = rng.integers(0, n_runs, size=ids.size)
+        order = np.lexsort((ids, run))
+        ids_in.append(ids[order])
+        tfs_in.append(tfs[order])
+        dls_in.append(dls[order])
+        pos_in.extend(pos[i] for i in order if with_pos)
+        offsets.append(offsets[-1] + ids.size)
+    b = encode_postings_batch(
+        np.concatenate(ids_in),
+        np.concatenate(tfs_in),
+        np.array(offsets),
+        np.concatenate(dls_in),
+        np.concatenate(pos_in) if with_pos else None,
+    )
+    for g, (ids, tfs, dls, pos) in enumerate(want):
+        n = ids.size
+        assert b.n[g] == n and b.cf[g] == int(tfs.sum())
+        out_ids, out_tfs = decode_postings(n, b.doc_bytes[g].as_py(), b.tf_bytes[g].as_py())
+        assert np.array_equal(out_ids, ids) and np.array_equal(out_tfs, tfs)
+        if with_pos:
+            assert np.array_equal(decode_positions(b.pos_bytes[g].as_py(), tfs), np.concatenate(pos))
+        else:
+            assert b.pos_bytes[g].as_py() == b""
+        blocks = [slice(lo, min(lo + BLOCK_SIZE, n)) for lo in range(0, n, BLOCK_SIZE)]
+        assert b.block_first_doc[g].as_py() == [int(ids[s][0]) for s in blocks]
+        assert b.block_last_doc[g].as_py() == [int(ids[s][-1]) for s in blocks]
+        assert b.block_max_tf[g].as_py() == [int(tfs[s].max()) for s in blocks]
+        assert b.block_min_dl[g].as_py() == [int(dls[s].min()) for s in blocks]
+        # the one-group encoder is the same kernel
+        one = encode_postings(ids, tfs, dls)
+        assert one.doc_bytes == b.doc_bytes[g].as_py() and one.tf_bytes == b.tf_bytes[g].as_py()

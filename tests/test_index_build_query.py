@@ -672,3 +672,65 @@ def test_scroll_export_edge_cases(searcher):
 
     with _pytest.raises(ValueError, match="positive"):
         searcher.scroll_export("dup", "or", 0)
+
+
+def test_manifest_bytes_are_reproducible(spark, tmp_path_factory):
+    """Two builds of one corpus, and a merge of each, write byte-identical
+    manifest.json files: the build wall time is returned, not committed."""
+    from flume_elasticsearch_2_spark.plans.merge import merge_indexes
+
+    rows = [(i, "alpha beta" + " gamma" * (i % 3)) for i in range(64)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    root = tmp_path_factory.mktemp("repro")
+    blobs = []
+    for rep in range(2):
+        built = build_index(spark, docs, str(root / f"b{rep}"), n_shards=2)
+        merged = merge_indexes(spark, [str(root / f"b{rep}")], str(root / f"m{rep}"))
+        assert built["built_wall_s"] >= 0 and merged["built_wall_s"] >= 0
+        blobs.append([(root / f"{k}{rep}" / "manifest.json").read_bytes() for k in "bm"])
+    assert blobs[0] == blobs[1]
+    assert b"built_wall_s" not in blobs[0][0]
+
+
+def test_run_merge_encoder_carries_groups_across_batches():
+    """The run-merge encoder gives the same rows whether a partition's
+    (shard, term) groups arrive in one Arrow batch or cut at every row,
+    including interleaved runs and positional runs."""
+    import numpy as np
+    import pyarrow as pa
+
+    from flume_elasticsearch_2_spark.plans.build_index import (
+        PARTIAL_COLS,
+        _make_run_merge_encoder,
+    )
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for shard in (0, 1):
+        for term in ("a", "b", "c"):
+            ids = np.unique(rng.integers(0, 500, size=40)).astype(np.uint32)
+            run = rng.integers(0, 3, size=ids.size)  # 3 interleaved runs
+            for r in range(3):
+                sel = ids[run == r]
+                tfs = rng.integers(1, 4, size=sel.size).astype(np.uint32)
+                pos = np.concatenate(
+                    [np.arange(t, dtype=np.uint32) for t in tfs]
+                ) if term != "c" else np.empty(0, np.uint32)
+                if sel.size:
+                    rows.append((shard, term, int(sel[0]) + shard * 500,
+                                 sel.tobytes(), tfs.tobytes(), pos.tobytes()))
+    rows.sort(key=lambda r: r[:3])
+    cols = list(zip(*rows))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.int32()), pa.array(cols[1]), pa.array(cols[2], pa.int64()),
+         *(pa.array(c, pa.binary()) for c in cols[3:])],
+        names=PARTIAL_COLS,
+    )
+    enc = _make_run_merge_encoder(1000, 2)
+    whole = pa.Table.from_batches(list(enc(iter([batch]))))
+    cut = pa.Table.from_batches(
+        list(enc(iter([batch.slice(i, 1) for i in range(batch.num_rows)])))
+    )
+    assert whole.num_rows == 6
+    assert whole.equals(cut)
+    assert whole.column("pos_bytes").to_pylist()[2::3] == [b"", b""]  # term "c"

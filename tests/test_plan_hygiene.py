@@ -709,3 +709,53 @@ def test_empty_serving_results_start_no_job(spark, tmp_path_factory):
             assert df.schema.simpleString() == schema, name
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_count_pages_start_no_second_job(spark, tmp_path_factory):
+    """count / count_terminated / facet_query_count return their one-row
+    page as a local relation: each runs exactly its scatter job (one), and
+    a single-term OR count, answered from the dictionary's df, runs none."""
+    from flume_elasticsearch_2_spark.plans.build_index import build_index
+    from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
+
+    rows = [(i, "hot pad" + (" rare" if i < 8 else "") + " pad" * (i % 5)) for i in range(200)]
+    d = str(tmp_path_factory.mktemp("countpages") / "idx")
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"), d, n_shards=4)
+    s = IndexSearcher(spark, d)
+    sc = spark.sparkContext
+    cases = [
+        ("count", lambda: s.count("rare hot", mode="and"), [(8,)], 1),
+        ("count-df", lambda: s.count("rare"), [(8,)], 0),
+        ("terminated", lambda: s.count_terminated("hot pad", 5), [(20, 1)], 1),
+        ("facet-count", lambda: s.facet_query_count("hot", "rare"), [(8,)], 1),
+        ("facet-count-all", lambda: s.facet_query_count(None, "rare hot", facet_mode="and"),
+         [(8,)], 1),
+    ]
+    try:
+        for name, run, want, n_jobs in cases:
+            group = f"hyg-count-{name}"
+            sc.setJobGroup(group, name)
+            assert [tuple(r) for r in run().collect()] == want, name
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_index_webpages_job_count(spark, tmp_path_factory):
+    """The webpages build runs at most 28 Spark jobs: the id space comes
+    from the dense doc ids, not from a max() pass over the corpus."""
+    from flume_elasticsearch_2_spark.plans.pipeline import index_webpages
+    from flume_elasticsearch_2_spark.sources.webpages import generate_webpages
+
+    sc = spark.sparkContext
+    pages = generate_webpages(spark, 300, n_partitions=4)
+    try:
+        sc.setJobGroup("hyg-build", "index_webpages")
+        manifest = index_webpages(
+            spark, pages, str(tmp_path_factory.mktemp("jobs") / "idx"), n_shards=4
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("hyg-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert manifest["id_space"] == manifest["n_docs"]
+    assert len(jobs) <= 28, sorted(jobs)
