@@ -1,0 +1,3 @@
+from . import pyworker
+
+pyworker.install()

@@ -1167,7 +1167,15 @@ def _scatter(
     tasks, so the scatter is one narrow stage run in one wave, with one
     Python worker per task and no exchange; collected rows keep task
     order. ``kernel`` is shipped to the executors and must not capture the
-    searcher. No tasks, no job."""
+    searcher. No tasks, no job.
+
+    A no-op scatter job takes ~120-140 ms on 4 cores (``tools/python_hop.py``):
+    ~60 ms from ``collect()`` to task launch, ~25 ms from launch to the
+    kernel's first line, ~18 ms from the last task's end to the collect's
+    return. Two per-task costs are kept out of it: PySpark's import-cache
+    reset re-reading every zip archive (:mod:`..pyworker`) and a TCP
+    delayed-ACK stall before the first Arrow batch (the Unix socket that
+    :func:`..session.get_spark` sets)."""
     if not tasks:
         return _relation(spark, schema)
 
@@ -1183,15 +1191,18 @@ def _scatter(
 
 
 def _relation(
-    spark: SparkSession, schema: str, pdf: pd.DataFrame | None = None
+    spark: SparkSession, schema: str, rows: pd.DataFrame | list[tuple] | None = None
 ) -> DataFrame:
-    """A driver-built result as a local relation, so collecting it starts
-    no Spark job. An empty result is an empty Arrow table: Spark turns an
-    empty list or an empty pandas frame into an RDD, whose collect is a
-    job of empty tasks."""
-    if pdf is not None and len(pdf):
-        return spark.createDataFrame(pdf, schema)
-    return spark.createDataFrame(to_arrow_schema(StructType.fromDDL(schema)).empty_table())
+    """A driver-built result (a pandas frame, or tuples in ``schema``'s
+    column order) as a local relation, so collecting it starts no Spark
+    job. Spark turns a list of tuples, and an empty pandas frame, into an
+    RDD, whose collect is a job: an empty result is an empty Arrow table."""
+    struct = StructType.fromDDL(schema)
+    if rows is None or not len(rows):
+        return spark.createDataFrame(to_arrow_schema(struct).empty_table())
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(rows, columns=struct.names)
+    return spark.createDataFrame(rows, schema)
 
 
 _HITS = "doc_id long, score double"
@@ -1476,8 +1487,9 @@ class IndexSearcher:
 
         This is the ES data-node request path without the cluster hop — the
         right shape for interactive/low-latency use where the per-query
-        Spark job (~0.3-0.4 s on 4 cores: job launch plus one Python worker
-        per task) dwarfs actual scoring (~ms).
+        Spark job (~120-150 ms on 4 cores, of which ~100 ms is job launch
+        and the Python-task hop; see :func:`_scatter`) dwarfs actual
+        scoring (~ms).
         The plan, the shard kernel and the gather are :meth:`search`'s, so
         the two are rank-identical; tested against it. On a cluster this
         runs on whatever node holds/mounts the segment store — shards are
@@ -1783,8 +1795,8 @@ class IndexSearcher:
         gives it, from one metadata read for the whole batch.
 
         This is the serving shape for query *throughput* at scale: per-query
-        ``search`` pays one Spark job (~0.3-0.4 s of job launch and Python
-        workers on 4 cores, against ~ms of NumPy scoring), while here each
+        ``search`` pays one Spark job (~120-150 ms of job launch and Python
+        task hop on 4 cores, against ~ms of NumPy scoring), while here each
         shard kernel reads its postings once
         (Parquet-filtered to the union of all query terms) and scores every
         query that touches the shard, so N queries cost one job and one
@@ -2003,8 +2015,8 @@ class IndexSearcher:
             if dist <= int(max_edits):
                 cand.append((t, int(dist), int(d)))
         cand.sort(key=lambda x: (x[1], -x[2], x[0]))
-        return self.spark.createDataFrame(
-            cand[: int(size)], "suggestion string, distance long, df long"
+        return _relation(
+            self.spark, "suggestion string, distance long, df long", cand[: int(size)]
         )
 
     def complete(self, prefix: str, size: int = 5) -> DataFrame:
@@ -2031,9 +2043,7 @@ class IndexSearcher:
             zip(tbl["term"].to_pylist(), (int(d) for d in tbl["df"].to_pylist())),
             key=lambda td: (-td[1], td[0]),
         )
-        return self.spark.createDataFrame(
-            cand[: int(size)], "suggestion string, weight long"
-        )
+        return _relation(self.spark, "suggestion string, weight long", cand[: int(size)])
 
     def suggest_phrase(
         self,
@@ -2052,10 +2062,10 @@ class IndexSearcher:
         work, the same coordinator-side shape ES uses."""
         from ..operators.multiterm import _phrase_candidates
 
+        schema = "suggestion string, score double"
         input_terms = tokenize(text)
-        empty = _relation(self.spark, "suggestion string, score double")
         if not input_terms:
-            return empty
+            return _relation(self.spark, schema)
         ds = pads.dataset(f"{self.index_dir}/terms", format="parquet")
         if prefix_length:
             filt = pads.field("term").isin(sorted(set(input_terms)))
@@ -2076,7 +2086,7 @@ class IndexSearcher:
             input_terms, dictionary, self.n_docs, size, max_edits,
             prefix_length, max_candidates,
         )
-        return self.spark.createDataFrame(ranked, "suggestion string, score double")
+        return _relation(self.spark, schema, ranked)
 
     def fuzzy_like_this(
         self,
@@ -2286,16 +2296,12 @@ class IndexSearcher:
         docFreq/totalTermFreq for this API."""
         from collections import Counter as _Counter
 
+        schema = "term string, term_freq long, doc_freq long, ttf long"
         row = self.mget([int(doc_id)], columns=["text"]).collect()
-        empty = _relation(
-            self.spark, "term string, term_freq long, doc_freq long, ttf long"
-        )
-        if not row or row[0]["text"] is None:
-            return empty
-        tfs = _Counter(tokenize(row[0]["text"]))
+        tfs = _Counter(tokenize(row[0]["text"] or "") if row else ())
         terms = sorted(tfs)
         if not terms:
-            return empty
+            return _relation(self.spark, schema)
         tbl = pads.dataset(f"{self.index_dir}/terms", format="parquet").to_table(
             columns=["term", "df", "cf"], filter=pads.field("term").isin(terms)
         )
@@ -2305,10 +2311,7 @@ class IndexSearcher:
                 tbl["term"].to_pylist(), tbl["df"].to_pylist(), tbl["cf"].to_pylist()
             )
         }
-        return self.spark.createDataFrame(
-            [(t, int(tfs[t]), *stats[t]) for t in terms],
-            "term string, term_freq long, doc_freq long, ttf long",
-        )
+        return _relation(self.spark, schema, [(t, int(tfs[t]), *stats[t]) for t in terms])
 
     def mtermvectors(self, doc_ids: list[int]) -> DataFrame:
         """ES ``_mtermvectors`` on the SERVING path: one IN-pushdown
@@ -2317,14 +2320,12 @@ class IndexSearcher:
         passes, batch cost ≈ one doc's."""
         from collections import Counter as _Counter
 
-        empty = _relation(
-            self.spark, "doc_id long, term string, term_freq long, doc_freq long, ttf long"
-        )
+        schema = "doc_id long, term string, term_freq long, doc_freq long, ttf long"
         rows = self.mget(sorted({int(i) for i in doc_ids}), columns=["text"]).collect()
         tfs = {int(r["doc_id"]): _Counter(tokenize(r["text"] or "")) for r in rows}
         all_terms = sorted({t for c in tfs.values() for t in c})
         if not all_terms:
-            return empty
+            return _relation(self.spark, schema)
         tbl = pads.dataset(f"{self.index_dir}/terms", format="parquet").to_table(
             columns=["term", "df", "cf"], filter=pads.field("term").isin(all_terms)
         )
@@ -2339,9 +2340,7 @@ class IndexSearcher:
             for did in sorted(tfs)
             for t in sorted(tfs[did])
         ]
-        return self.spark.createDataFrame(
-            out, "doc_id long, term string, term_freq long, doc_freq long, ttf long"
-        )
+        return _relation(self.spark, schema, out)
 
     def index_stats(self) -> DataFrame:
         """ES ``_stats`` on the SERVING path: one row ``(n_docs, avgdl,

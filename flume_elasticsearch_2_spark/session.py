@@ -3,14 +3,33 @@
 Tuned for the target shape (SURVEY.md §4.3): AQE on (post-shuffle coalesce +
 skew-join splitting), Arrow for every JVM<->Python boundary, shuffle-partition
 count sized to the local core count but meant to be overridden to ~2-3x total
-cores on a real cluster.
+cores on a real cluster. The JVM talks to its Python workers over Unix-domain
+sockets (no TCP delayed-ACK stall before a task's first Arrow batch).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+_SOCKET_DIR: str | None = None
+
+
+def _socket_dir() -> str:
+    """A short private (mode 0700) directory for PySpark's Unix-domain
+    sockets, removed at interpreter exit. PySpark names each socket
+    ``<dir>/.<uuid4>.sock`` and ``AF_UNIX`` caps the path at 107 bytes, so
+    ``<dir>`` must stay within 64 characters; the default, ``java.io.tmpdir``,
+    may be any length."""
+    global _SOCKET_DIR
+    if _SOCKET_DIR is None or not os.path.isdir(_SOCKET_DIR):
+        _SOCKET_DIR = tempfile.mkdtemp(prefix="fts-", dir="/tmp")
+        atexit.register(shutil.rmtree, _SOCKET_DIR, True)
+    return _SOCKET_DIR
 
 
 def get_spark(
@@ -38,6 +57,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {"spark.python.unix.domain.socket.enabled": "true", **(extra_conf or {})}
+    if "spark.python.unix.domain.socket.dir" not in conf:
+        conf["spark.python.unix.domain.socket.dir"] = _socket_dir()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -612,12 +612,18 @@ def test_or_filter_node_pushes_into_parquet_scan(spark, documents):
 
 
 def _group_jobs(sc, group: str) -> list[tuple[int, int]]:
-    """(stage count, task count) of every job run under one job group."""
-    st = sc.statusTracker()
+    """(stages run, tasks run) of every job run under one job group, in job
+    order, read from Spark's status store once its listener bus has drained
+    (tools/build_job_table.py reads it the same way). The counts are the
+    job's own: a long session evicts old stages from the store, skipped
+    ones first, so a per-stage lookup can find nothing."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
     out = []
-    for jid in st.getJobIdsForGroup(group):
-        stages = st.getJobInfo(jid).stageIds
-        out.append((len(stages), sum(st.getStageInfo(s).numTasks for s in stages)))
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(jid)
+        out.append((job.numCompletedStages(), job.numCompletedTasks()))
     return out
 
 
@@ -736,7 +742,7 @@ def test_count_pages_start_no_second_job(spark, tmp_path_factory):
             group = f"hyg-count-{name}"
             sc.setJobGroup(group, name)
             assert [tuple(r) for r in run().collect()] == want, name
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs, name
+            assert len(_group_jobs(sc, group)) == n_jobs, name
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
@@ -754,8 +760,52 @@ def test_index_webpages_job_count(spark, tmp_path_factory):
         manifest = index_webpages(
             spark, pages, str(tmp_path_factory.mktemp("jobs") / "idx"), n_shards=4
         )
-        jobs = sc.statusTracker().getJobIdsForGroup("hyg-build")
+        jobs = _group_jobs(sc, "hyg-build")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert manifest["id_space"] == manifest["n_docs"]
-    assert len(jobs) <= 28, sorted(jobs)
+    assert len(jobs) <= 28, jobs
+
+
+def test_suggest_and_termvector_pages_start_no_extra_job(spark, tmp_path_factory):
+    """The suggesters read the terms/ dictionary with pyarrow and return a
+    local relation: no Spark job. termvectors / mtermvectors run only
+    their stored-field fetch (mget) job; the page itself starts none."""
+    from flume_elasticsearch_2_spark.plans.build_index import build_segments_partial
+    from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
+
+    rows = [
+        (i, "hot pad" + (" rare" if i < 8 else " rate" if i < 12 else "") + " pad" * (i % 5))
+        for i in range(200)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    d = str(tmp_path_factory.mktemp("suggestpages") / "idx")
+    build_segments_partial(spark, docs, d, n_shards=4, orig_ids=docs)
+    s = IndexSearcher(spark, d)
+    sc = spark.sparkContext
+
+    def jobs(name: str, run) -> tuple[list, int]:
+        group = f"hyg-suggest-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            got = [tuple(r) for r in run().collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, len(_group_jobs(sc, group))
+
+    _, fetch_one = jobs("mget-one", lambda: s.mget([3], columns=["text"]))
+    _, fetch_two = jobs("mget-two", lambda: s.mget([3, 199], columns=["text"]))
+    assert fetch_one and fetch_two
+    cases = [
+        ("suggest", lambda: s.suggest("rare", max_edits=1), [("rate", 1, 4)], 0),
+        ("suggest-none", lambda: s.suggest("qqqq"), [], 0),
+        ("complete", lambda: s.complete("ra"), [("rare", 8), ("rate", 4)], 0),
+        ("suggest-phrase", lambda: s.suggest_phrase("hot rame"), None, 0),
+        ("termvectors", lambda: s.termvectors(3),
+         [("hot", 1, 200, 200), ("pad", 4, 200, 600), ("rare", 1, 8, 8)], fetch_one),
+        ("mtermvectors", lambda: s.mtermvectors([3, 199]), None, fetch_two),
+    ]
+    for name, run, want, n_jobs in cases:
+        got, n = jobs(name, run)
+        assert got == want if want is not None else got, (name, got)
+        assert n == n_jobs, name

@@ -48,19 +48,18 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from flume_elasticsearch_2_spark.plans.pipeline import index_webpages
     from flume_elasticsearch_2_spark.plans.query_index import IndexSearcher
+    from flume_elasticsearch_2_spark.session import get_spark
     from flume_elasticsearch_2_spark.sources.webpages import write_webpages
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName(f"fts-scaling-{args.cores}")
-        .config("spark.sql.shuffle.partitions", str(max(args.cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("FTS_DRIVER_MEM", "8g"))
-        .getOrCreate()
+    # the repo's session settings (AQE, Arrow, the workers' Unix socket),
+    # with this tool's partition count and driver memory
+    spark = get_spark(
+        app_name=f"fts-scaling-{args.cores}",
+        master=f"local[{args.cores}]",
+        shuffle_partitions=max(args.cores, 8),
+        extra_conf={"spark.driver.memory": os.environ.get("FTS_DRIVER_MEM", "8g")},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
