@@ -8,47 +8,17 @@ contract pinned by BASELINE.json north_rule):
 
 Unlike Lucene we use exact float64 doc lengths (no 1-byte norm quantization,
 SURVEY §2.5 Q4) so Spark, NumPy oracle, and DuckDB SQL oracle agree to 1e-9.
-Provided in three forms: a Spark Column expression (JVM, codegen), a NumPy
-kernel (for the segment query path), and a SQL fragment (for oracles).
+This module holds the constants and the Spark Column form (JVM, codegen);
+the segment query path and the oracles spell the same formula inline.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
-
-
-def idf_np(df: np.ndarray, n_docs: float) -> np.ndarray:
-    df = df.astype(np.float64)
-    return np.log1p((n_docs - df + 0.5) / (df + 0.5))
-
-
-def bm25_np(
-    tf: np.ndarray,
-    df: np.ndarray,
-    dl: np.ndarray,
-    n_docs: float,
-    avgdl: float,
-    k1: float = K1,
-    b: float = B,
-) -> np.ndarray:
-    """Vectorized per-(doc,term) BM25 partial score."""
-    tf = tf.astype(np.float64)
-    norm = k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
-    return idf_np(df, n_docs) * tf * (k1 + 1.0) / (tf + norm)
-
-
-def bm25_upper_bound(max_tf: np.ndarray, df: float, n_docs: float, avgdl: float) -> np.ndarray:
-    """Per-block score upper bound for Block-Max WAND: assume the most
-    favorable doc length (dl -> 0 gives norm k1*(1-b), the max of the tf
-    saturation curve)."""
-    tf = max_tf.astype(np.float64)
-    idf = float(np.log1p((n_docs - df + 0.5) / (df + 0.5)))
-    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B))
 
 
 def bm25_col(
@@ -59,11 +29,3 @@ def bm25_col(
     idf = F.log1p((n_docs.cast("double") - df.cast("double") + F.lit(0.5)) / (df.cast("double") + F.lit(0.5)))
     norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / avgdl.cast("double"))
     return idf * tfd * F.lit(k1 + 1.0) / (tfd + norm)
-
-
-def bm25_sql(tf: str, df: str, dl: str, n_docs: str, avgdl: str, k1: float = K1, b: float = B) -> str:
-    """The identical formula as an ANSI-SQL fragment for DuckDB oracles."""
-    return (
-        f"ln(1 + ({n_docs} - {df} + 0.5) / ({df} + 0.5)) * {tf} * ({k1} + 1.0)"
-        f" / ({tf} + {k1} * (1.0 - {b} + {b} * {dl} / {avgdl}))"
-    )

@@ -17,21 +17,22 @@ Design (scale-first):
   doubles as ES-style doc sharding for scatter/gather queries (Q6): each
   shard is a self-contained mini-index over its doc range, so query-time
   reassembly of a hot term's postings is an ordered concat across shards.
-* **One shuffle, packed rows** (primary path, ``build_segments_partial``):
-  each input partition tokenizes and builds posting RUNS in NumPy
+* **One shuffle, packed rows** (``build_segments_partial``, the one build
+  path): each input partition tokenizes and builds posting RUNS in NumPy
   (factorize + run-length tf), emitting one uint32-packed row per
   (batch, shard, term) — ~200x fewer exchange rows than a per-token
   shuffle; doc lengths ride the same pass as sentinel runs, so the corpus
   is tokenized exactly once. A run-merge encoder merges the sorted runs of
-  every (shard, term). The tf/occurrence-row paths (``build_segments``) are
-  kept for staged-chunk resume and as independent cross-checks.
-* **Batch kernels, no per-term Python**: the partial builder and both
-  encoders are ``mapInArrow`` bodies. The builder cuts all of a batch's runs
-  from flat arrays by offsets; an encoder reads a batch's packed runs
-  straight from the Arrow buffers and encodes every (shard, term) group of
-  the batch in ONE :func:`~..codec.encode_postings_batch` call (segmented
-  sort, delta, Stream VByte and block-max ``reduceat``), so per-batch cost
-  is a handful of NumPy passes whatever the number of terms.
+  every (shard, term). The multi-field, routed, merge and chunked-resume
+  builds feed the same encoder.
+* **Batch kernels, no per-term Python**: the partial builder and the
+  run-merge encoder are ``mapInArrow`` bodies. The builder cuts all of a
+  batch's runs from flat arrays by offsets; the encoder reads a batch's
+  packed runs straight from the Arrow buffers and encodes every
+  (shard, term) group of the batch in ONE
+  :func:`~..codec.encode_postings_batch` call (segmented sort, delta,
+  Stream VByte and block-max ``reduceat``), so per-batch cost is a handful
+  of NumPy passes whatever the number of terms.
 * **Compression**: per (term, shard) the sorted doc ids are delta +
   Stream-VByte encoded (codec.py, vectorized NumPy) with per-128-doc
   block-max metadata for BMW pruning (I3).
@@ -50,9 +51,9 @@ Design (scale-first):
 * **Chunked tokenize + lineage resume** (S4 intended semantics, fixing
   reference bugs §8.1/8.5: the reference checkpoints only at stop() and
   never advances its file pointer): see ``lineage.py`` /
-  ``build_index_chunked`` — the expensive tokenize+tf stage is persisted per
-  input chunk with a lineage record written after each chunk's durable
-  write; a restarted build skips ``status=done`` chunks.
+  ``build_index_chunked`` — each input chunk's packed runs are staged once,
+  with a lineage record written after the chunk's durable write; a
+  restarted build skips ``status=done`` chunks.
 """
 
 from __future__ import annotations
@@ -75,7 +76,6 @@ from pyspark.sql import functions as F
 
 from .fscommit import COMMIT_FS
 from ..codec import BLOCK_SIZE, binary_array, encode_postings_batch
-from ..functions.tokenizer import tokens_col
 
 POSTINGS_SCHEMA = (
     "shard int, term string, n long, cf long, doc_bytes binary, tf_bytes binary, "
@@ -97,25 +97,8 @@ def write_manifest(tmp: str, manifest: dict[str, Any], t0: float) -> dict[str, A
     return {**manifest, "built_wall_s": round(time.time() - t0, 3)}
 
 
-def _shard_dl_dense(docs_dir: str, shard: int, id_space: int, n_shards: int) -> np.ndarray:
-    """Dense doc-length array (indexed by shard-local id) from the already-
-    written docs table of ONE shard — the encoders read it to compute true
-    block-max metadata (block_min_dl). One pyarrow read per shard per task,
-    amortized across every term group of that shard."""
-    import pyarrow.dataset as pads
-
-    base = shard_start(shard, id_space, n_shards)
-    span = shard_start(shard + 1, id_space, n_shards) - base
-    tbl = pads.dataset(f"{docs_dir}/shard={shard}", format="parquet").to_table(
-        columns=["doc_id", "dl"]
-    )
-    dense = np.zeros(span, dtype=np.int64)
-    dense[tbl["doc_id"].to_numpy() - base] = tbl["dl"].to_numpy()
-    return dense
-
-
 def _check_shard_span(id_space: int, n_shards: int) -> None:
-    """Shard-local ids are stored uint32: the encoders compute
+    """Shard-local ids are stored uint32: the encoder computes
     ``doc_id - shard_start`` whose span is ``ceil(id_space / n_shards)`` —
     NOT ``n_docs`` (a sparse or caller-pinned id space can dwarf the doc
     count). Wrapping would silently corrupt postings, so fail loudly and
@@ -126,46 +109,6 @@ def _check_shard_span(id_space: int, n_shards: int) -> None:
             f"shard-local id span {max_span} exceeds uint32: id_space={id_space} "
             f"needs n_shards >= {-(-id_space // ((1 << 32) - 1))}"
         )
-
-
-def term_frequencies(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, term, tf) + (doc_id, dl) in one pass over the tokens.
-
-    Returns (tf_df, dl_df). Token explosion and the (doc_id, term) count are
-    all JVM-side; the count benefits from partial aggregation before the
-    shuffle (map-side combine), which is what keeps a Zipfian corpus from
-    shuffling one row per token occurrence.
-    """
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), tokens_col(text_col).alias("toks")
-    )
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    return tf, dl
-
-
-def token_occurrences(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """(doc_id, term) one row per token occurrence + (doc_id, dl).
-
-    The single-shuffle build input: occurrences go straight to the
-    (shard, term) exchange and tf is recovered by run-length there — skips
-    the (doc_id, term) pre-aggregation shuffle of :func:`term_frequencies`
-    (whose map-side combine saves little on natural text, where most
-    per-doc tfs are 1)."""
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), tokens_col(text_col).alias("toks")
-    )
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    occ = toks.select("doc_id", F.explode("toks").alias("term"))
-    return occ, dl
 
 
 def shard_start(shard: int, id_space: int, n_shards: int) -> int:
@@ -238,28 +181,25 @@ def _postings_batch(
     ids: np.ndarray,
     tfs: np.ndarray,
     offsets: np.ndarray,
-    dl_of,
+    dls: np.ndarray | None,
     id_space: int,
     n_shards: int,
     positions: np.ndarray | None = None,
     has_pos: np.ndarray | None = None,
 ) -> pa.RecordBatch:
     """Encode one batch of whole ``keys`` groups (shard-local ``ids``,
-    group ``offsets``) with :func:`encode_postings_batch` and return the
-    POSTINGS_SCHEMA rows, key columns first. ``dl_of(route, shard, ids,
-    offsets)`` gives each posting's doc length (route is None unless the
-    keys lead with it)."""
+    group ``offsets``, each posting's doc length ``dls``) with
+    :func:`encode_postings_batch` and return the POSTINGS_SCHEMA rows, key
+    columns first."""
     group_keys = {k: batch.column(k).take(starts) for k in keys}
-    shard = group_keys["shard"].to_numpy()
-    route = group_keys["route"].to_numpy() if "route" in group_keys else None
     enc = encode_postings_batch(
         ids,
         tfs,
         offsets,
-        dl_of(route, shard, ids, offsets),
+        dls,
         positions,
         has_pos,
-        bases=_shard_bases(shard, id_space, n_shards),
+        bases=_shard_bases(group_keys["shard"].to_numpy(), id_space, n_shards),
     )
     return pa.RecordBatch.from_arrays(
         [*group_keys.values(), pa.array(enc.n), pa.array(enc.cf), enc.doc_bytes, enc.tf_bytes,
@@ -269,76 +209,39 @@ def _postings_batch(
     )
 
 
-def _dense_dl_reader(id_space: int, n_shards: int, docs_dir: str | None):
-    """``dl_of`` for :func:`_postings_batch`: each posting's doc length from
-    the dense per-shard ``dl`` array of the already-written docs table
-    (``docs_dir/route=<r>`` per route for a routed build), or None without
-    ``docs_dir``. Each array is read once per task and indexed once per
-    shard present in a batch."""
+def _dense_dl_reader(id_space: int, n_shards: int, docs_dir: str):
+    """``dl_of(route, shard, ids, offsets)``: each posting's doc length
+    (groups' ``shard`` and, for a routed build, ``route``; else None) from
+    the already-written docs table (``docs_dir/route=<r>`` per route for a
+    routed build), for true block-max metadata (block_min_dl). Each shard's
+    table is read once per task into a dense array by shard-local id; a doc
+    absent from it (or a shard with no table) reads 0."""
+    import pyarrow.dataset as pads
+
     cache: dict[tuple, np.ndarray] = {}
 
-    def dl_of(route, shard: np.ndarray, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray | None:
-        if docs_dir is None:
-            return None
+    def dense(path: str, shard: int) -> np.ndarray:
+        base = shard_start(shard, id_space, n_shards)
+        out = np.zeros(shard_start(shard + 1, id_space, n_shards) - base, dtype=np.int64)
+        if os.path.isdir(path):
+            tbl = pads.dataset(path, format="parquet").to_table(columns=["doc_id", "dl"])
+            out[tbl["doc_id"].to_numpy() - base] = tbl["dl"].to_numpy()
+        return out
+
+    def dl_of(route, shard: np.ndarray, ids: np.ndarray, offsets: np.ndarray) -> np.ndarray:
         part = shard.astype(np.int64) + (0 if route is None else route.astype(np.int64) * n_shards)
         per_posting = np.repeat(part, np.diff(offsets))
         dls = np.empty(ids.size, dtype=np.int64)
         for key in np.unique(part):
             r, sh = divmod(int(key), n_shards)
-            ddir = docs_dir if route is None else f"{docs_dir}/route={r}"
-            if (ddir, sh) not in cache:
-                cache[(ddir, sh)] = _shard_dl_dense(ddir, sh, id_space, n_shards)
+            path = f"{docs_dir}/shard={sh}" if route is None else f"{docs_dir}/route={r}/shard={sh}"
+            if path not in cache:
+                cache[path] = dense(path, sh)
             m = per_posting == key
-            dls[m] = cache[(ddir, sh)][ids[m]]
+            dls[m] = cache[path][ids[m]]
         return dls
 
     return dl_of
-
-
-def _make_encode_partition(
-    id_space: int, n_shards: int, occurrences: bool = False, docs_dir: str | None = None
-):
-    """mapInArrow body factory: partition is hash-partitioned by
-    (shard, term) and sorted by (shard, term, doc_id); encode each group's
-    postings. Doc ids are stored SHARD-LOCAL (minus shard_start) so the
-    uint32 codec holds as long as a single shard stays under 2^32 docs —
-    the global id space can be arbitrarily large (10^12 target).
-
-    With ``occurrences=True`` the input rows are raw token occurrences
-    (one row per token, no ``tf`` column, repeated doc_ids within a group)
-    and tf is recovered by run-length over the sorted doc ids — this is the
-    single-shuffle build path (the (doc_id, term) pre-aggregation shuffle is
-    skipped entirely).
-
-    Each batch of whole groups is one :func:`encode_postings_batch` call;
-    incomplete trailing groups carry across Arrow batches."""
-    keys = ["shard", "term"]
-    dl_of = _dense_dl_reader(id_space, n_shards, docs_dir)
-
-    def _encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch, starts in _whole_groups(batches, keys):
-            doc_ids = batch.column("doc_id").to_numpy()
-            n = len(doc_ids)
-            if occurrences:
-                # run-length over sorted (possibly repeated) doc ids -> tf
-                new = np.ones(n, dtype=bool)
-                new[1:] = doc_ids[1:] != doc_ids[:-1]
-                new[starts] = True
-                post = np.flatnonzero(new)
-                tfs = np.diff(np.append(post, n))
-                offsets = np.searchsorted(post, np.append(starts, n))
-                doc_ids = doc_ids[post]
-            else:
-                tfs = batch.column("tf").to_numpy()
-                offsets = np.append(starts, n)
-            shard = batch.column("shard").to_numpy()[starts]
-            local = doc_ids - np.repeat(_shard_bases(shard, id_space, n_shards), np.diff(offsets))
-            yield _postings_batch(
-                batch, keys, starts, local.astype(np.uint32), tfs, offsets,
-                dl_of, id_space, n_shards,
-            )
-
-    return _encode_partition
 
 
 # ---------------------------------------------------------------------------
@@ -497,9 +400,15 @@ def _make_run_merge_encoder(
     Each batch of whole groups is ONE :func:`encode_postings_batch` call:
     the runs' packed ids/tfs/positions are read as flat arrays straight from
     the Arrow buffers, and the kernel's segmented sort merges runs whose
-    doc ranges interleave. The trailing group carries across batches."""
+    doc ranges interleave. The trailing group carries across batches.
+
+    The docs table under ``docs_dir`` is the liveness set: a posting whose
+    doc is missing from it (``dl == 0``; a doc with a posting has
+    ``dl >= tf >= 1``) is dropped with its positions, and a group left with
+    no posting emits no row. The chunked build drops its dedup losers this
+    way."""
     keys = ["route", "shard", "term"] if routed else ["shard", "term"]
-    dl_of = _dense_dl_reader(id_space, n_shards, docs_dir)
+    dl_of = _dense_dl_reader(id_space, n_shards, docs_dir) if docs_dir is not None else None
 
     def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch, starts in _whole_groups(batches, keys):
@@ -515,12 +424,47 @@ def _make_run_merge_encoder(
             if not has_pos.all():
                 group = np.repeat(np.arange(len(starts)), np.diff(rows))
                 pos = pos[np.repeat(has_pos[group], pos_per_run)]
+            dls = None
+            if dl_of is not None:
+                route = batch.column("route").to_numpy()[starts] if routed else None
+                dls = dl_of(route, batch.column("shard").to_numpy()[starts], ids, offsets)
+                keep = dls > 0
+                if not keep.all():
+                    with_pos = np.repeat(has_pos, np.diff(offsets))
+                    pos = pos[np.repeat(keep[with_pos], tfs[with_pos])]
+                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+                    kept = np.append(0, np.cumsum(keep))[offsets]
+                    live = kept[1:] > kept[:-1]
+                    if not live.any():
+                        continue
+                    starts, has_pos = starts[live], has_pos[live]
+                    offsets = np.append(kept[:-1][live], kept[-1])
             yield _postings_batch(
-                batch, keys, starts, ids, tfs, offsets, dl_of, id_space, n_shards,
+                batch, keys, starts, ids, tfs, offsets, dls, id_space, n_shards,
                 pos if has_pos.any() else None, has_pos,
             )
 
     return merge
+
+
+def _make_dl_decoder(id_space: int, n_shards: int, lead: tuple[str, ...] = ()):
+    """mapInArrow body: doc-length sentinel runs -> one ``(*lead, doc_id,
+    dl, shard)`` row per doc (global ids; ``lead`` key columns, e.g. a
+    routed build's ``route``, are repeated per doc)."""
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, per_run = _u32_runs(batch.column("ids"))
+            dls, _ = _u32_runs(batch.column("tfs"))
+            shard = np.repeat(batch.column("shard").to_numpy(), per_run)
+            yield pa.RecordBatch.from_arrays(
+                [*(pa.array(np.repeat(batch.column(k).to_numpy(), per_run)) for k in lead),
+                 pa.array(ids + _shard_bases(shard, id_space, n_shards)),
+                 pa.array(dls.astype(np.int64)), pa.array(shard)],
+                names=[*lead, "doc_id", "dl", "shard"],
+            )
+
+    return decode
 
 
 def build_segments_partial(
@@ -539,15 +483,10 @@ def build_segments_partial(
 
     Scale shape: tokenization is embarrassingly parallel; the exchange
     carries ~|vocab| x |input partitions| packed rows (not one row per
-    token); hot-term skew is bounded by doc-range sharding exactly as in
-    :func:`build_segments`.
+    token); hot-term skew is bounded by doc-range sharding: no (shard, term)
+    group holds more than one shard's docs.
     """
     t0 = time.time()
-    tmp = index_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp, exist_ok=True)
-
     from pyspark import StorageLevel
 
     # id_space may be pinned by the caller so several index GENERATIONS over
@@ -565,10 +504,39 @@ def build_segments_partial(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    manifest = _publish_partials(
+        spark, partials, index_dir, n_shards, id_space, orig_ids, store_positions, t0
+    )
+    partials.unpersist()
+    return manifest
+
+
+def _fresh_tmp(index_dir: str) -> str:
+    """An empty ``<index_dir>.tmp`` staging dir (a crashed build's leftover
+    is removed): every build writes there, then publishes it in one swap."""
+    tmp = index_dir + ".tmp"
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    os.makedirs(tmp, exist_ok=True)
+    return tmp
+
+
+def _publish_partials(
+    spark: SparkSession,
+    partials: DataFrame,
+    index_dir: str,
+    n_shards: int,
+    id_space: int,
+    orig_ids: DataFrame | None,
+    store_positions: bool,
+    t0: float,
+) -> dict[str, Any]:
+    """Fresh tmp dir -> :func:`_finalize_from_partials` -> publish: the
+    tail of the one-shot and the chunked builds."""
+    tmp = _fresh_tmp(index_dir)
     manifest = _finalize_from_partials(
         spark, partials, tmp, n_shards, id_space, orig_ids, store_positions, t0
     )
-    partials.unpersist()
     COMMIT_FS.publish(tmp, index_dir)
     return manifest
 
@@ -583,29 +551,18 @@ def _finalize_from_partials(
     store_positions: bool,
     t0: float,
 ) -> dict[str, Any]:
-    """Turn a (persisted) packed-run DataFrame into a complete committed
-    index tree under ``tmp`` (docs + postings + terms + manifest.json) —
-    the build tail shared by the single-field and multi-field builders.
-    The caller owns the partials' persistence and the final dir rename."""
+    """Turn a packed-run DataFrame into a complete committed index tree
+    under ``tmp`` (docs + postings + terms + manifest.json) — the build tail
+    shared by the single-field, multi-field and chunked builders. The docs
+    table inner-joins ``orig_ids``, so a doc it lacks leaves the index: its
+    postings are dropped by the encoder (the liveness rule of
+    :func:`_make_run_merge_encoder`). The caller owns the partials'
+    persistence and the final dir rename."""
     from pyspark import StorageLevel
 
     # --- docs table + corpus stats from the dl sentinel runs ---------------
-    def _decode_dl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                base = shard_start(int(row.shard), id_space, n_shards)
-                ids = np.frombuffer(row.ids, dtype=np.uint32).astype(np.int64) + base
-                dls = np.frombuffer(row.tfs, dtype=np.uint32).astype(np.int64)
-                outs.append(
-                    pd.DataFrame({"doc_id": ids, "dl": dls, "shard": int(row.shard)})
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    docs_out = (
-        partials.where(F.col("term") == DL_TERM)
-        .mapInPandas(_decode_dl, "doc_id long, dl long, shard int")
+    docs_out = partials.where(F.col("term") == DL_TERM).mapInArrow(
+        _make_dl_decoder(id_space, n_shards), "doc_id long, dl long, shard int"
     )
     if orig_ids is not None:
         docs_out = docs_out.join(orig_ids, "doc_id")
@@ -634,12 +591,8 @@ def _finalize_from_partials(
     )
 
     # ONE column-pruned metadata pass over the written postings feeds BOTH
-    # the global term dictionary and the skew audit (two separate directory
-    # scans before round 3 — at small corpus sizes the extra file-open pass
-    # was pure fixed overhead on the parallel-efficiency-critical path).
-    # Binary posting bytes are never read.
-    from pyspark import StorageLevel
-
+    # the global term dictionary and the skew audit; posting bytes are
+    # never read.
     meta_rows = (
         spark.read.parquet(f"{tmp}/postings")
         .select("shard", "term", "n", "cf")
@@ -712,10 +665,7 @@ def build_multifield_index(
     if not fields:
         raise ValueError("build_multifield_index needs at least one field")
     t0 = time.time()
-    tmp = index_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp, exist_ok=True)
+    tmp = _fresh_tmp(index_dir)
 
     from pyspark import StorageLevel
 
@@ -761,105 +711,6 @@ def build_multifield_index(
         "per_field": per_field,
     }
     manifest = write_manifest(tmp, manifest, t0)
-    COMMIT_FS.publish(tmp, index_dir)
-    return manifest
-
-
-def build_segments(
-    spark: SparkSession,
-    tf: DataFrame,
-    dl: DataFrame,
-    index_dir: str,
-    n_shards: int,
-    orig_ids: DataFrame | None = None,
-    occurrences: bool = False,
-) -> dict[str, Any]:
-    """Shuffle token rows by (shard, term), encode posting lists, write segments.
-
-    ``tf``: (doc_id, term, tf) pre-aggregated rows — or, with
-    ``occurrences=True``, raw (doc_id, term) token-occurrence rows (one per
-    token), in which case tf is recovered by run-length inside the encoder
-    and the build has exactly ONE wide shuffle. ``dl``: (doc_id, dl);
-    ``orig_ids`` optional (doc_id, orig_id) mapping for fetch-phase display.
-
-    ``dl`` is persisted (three consumers: stats, docs write); ``tf`` is NOT —
-    it has exactly one consumer (the encode shuffle), so caching it would be
-    a pure materialization tax.
-    """
-    t0 = time.time()
-    tmp = index_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp, exist_ok=True)
-
-    from pyspark import StorageLevel
-
-    dl = dl.persist(StorageLevel.MEMORY_AND_DISK)
-
-    stats_row = dl.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"), F.max("doc_id").alias("max_doc_id")
-    ).collect()[0]
-    n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
-    id_space = int(stats_row["max_doc_id"]) + 1
-    _check_shard_span(id_space, n_shards)
-    # exact integer floor division: the float form loses precision once
-    # doc_id * n_shards exceeds 2^53, which would disagree with shard_start's
-    # integer math at the 10^12-doc id-space target (wrapped uint32 locals)
-    shard_expr = F.expr(f"CAST((doc_id * {n_shards}) DIV {id_space} AS INT)").alias("shard")
-
-    docs_out = dl.select("doc_id", "dl", shard_expr)
-    if orig_ids is not None:
-        docs_out = docs_out.join(orig_ids, "doc_id")
-    docs_out.repartition(n_shards, "shard").write.mode("overwrite").partitionBy("shard").parquet(
-        f"{tmp}/docs"
-    )
-
-    # the one big shuffle: (shard, term) — doc-range sharding bounds group size;
-    # 2x parallelism in the reduce stage so a straggler wave doesn't gate it
-    sharded = tf.withColumn(
-        "shard", F.expr(f"CAST((doc_id * {n_shards}) DIV {id_space} AS INT)")
-    )
-    nparts = max(n_shards, 2 * spark.sparkContext.defaultParallelism)
-    cols = ["shard", "term", "doc_id"] + ([] if occurrences else ["tf"])
-    encoded = (
-        sharded.repartition(nparts, "shard", "term")
-        .sortWithinPartitions("shard", "term", "doc_id")
-        .select(*cols)
-        .mapInArrow(
-            _make_encode_partition(id_space, n_shards, occurrences, docs_dir=f"{tmp}/docs"),
-            POSTINGS_SCHEMA,
-        )
-    )
-    (
-        encoded.repartition(n_shards, "shard")
-        .sortWithinPartitions("term")  # row-group min/max stats prune `term IN`
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(f"{tmp}/postings")
-    )
-
-    # global term stats (df, cf) from a column-pruned read-back of the
-    # postings metadata (term, n, cf only — the binary columns are never
-    # touched): per-(term, shard) n sums to df. Avoids a second full
-    # aggregation pass over tf.
-    terms_df = (
-        spark.read.parquet(f"{tmp}/postings")
-        .groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"), F.sum("cf").cast("long").alias("cf"))
-    )
-    terms_df.coalesce(max(1, n_shards // 4)).write.mode("overwrite").parquet(f"{tmp}/terms")
-    dl.unpersist()
-
-    manifest = {
-        "format_version": 1,
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "id_space": id_space,
-        "n_shards": n_shards,
-        "block_size": BLOCK_SIZE,
-    }
-    manifest = write_manifest(tmp, manifest, t0)
-    # commit: manifest written last inside tmp, then one publish swap
     COMMIT_FS.publish(tmp, index_dir)
     return manifest
 

@@ -12,7 +12,7 @@ Spark-native way:
   index (fixing bug §8.6);
 * a lineage record is written **after** the chunk's derived data is durably
   on disk (not at shutdown), so a crash loses at most the in-flight chunk;
-* records carry per-chunk metrics (doc/posting counts, wall time) — the M1/
+* records carry per-chunk metrics (doc count, wall time) — the M1/
   M2 counter analog (FileSource.java:195-196, ElasticsearchSink.java:72-77).
 
 One JSON file per chunk (single-file atomic rename) keeps commits

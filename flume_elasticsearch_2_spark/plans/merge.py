@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from collections.abc import Iterator
 from typing import Any
@@ -43,6 +42,8 @@ from ..codec import BLOCK_SIZE, decode_positions, svb_decode
 from .build_index import (
     PARTIAL_SCHEMA,
     POSTINGS_SCHEMA,
+    _check_shard_span,
+    _fresh_tmp,
     _make_run_merge_encoder,
     shard_start,
     write_manifest,
@@ -166,14 +167,9 @@ def merge_indexes(
             "pin id_space at build time (build_index(..., id_space=...))"
         )
     n_shards_v, id_space = n_shards.pop(), id_spaces.pop()
-    from .build_index import _check_shard_span
-
     _check_shard_span(id_space, n_shards_v)
 
-    tmp = out_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp, exist_ok=True)
+    tmp = _fresh_tmp(out_dir)
 
     # --- docs: union; with dedup_key, newest generation wins per key -------
     docs = spark.read.parquet(f"{index_dirs[0]}/docs").withColumn("_gen", F.lit(0))

@@ -90,9 +90,9 @@ def index_webpages(
 ) -> dict[str, Any]:
     """Full pipeline; returns the manifest augmented with stage metrics.
 
-    One cache point (the prepared corpus feeds doc-id assignment, doc
-    lengths, and the tf explosion), one wide shuffle (the (shard, term)
-    exchange inside ``build_segments``).
+    One cache point (the prepared corpus feeds doc-id assignment and the
+    packed-run build), one wide shuffle (the (shard, term) exchange inside
+    ``build_segments_partial``).
     """
     from pyspark import StorageLevel
 

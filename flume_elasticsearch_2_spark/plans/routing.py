@@ -110,7 +110,6 @@ def build_routed_index(
     shard spans keep the skew bound."""
     if int(n_routes) < 1:
         raise ValueError("n_routes must be >= 1")
-    import shutil
     import time
 
     from pyspark import StorageLevel
@@ -121,8 +120,9 @@ def build_routed_index(
         PARTIAL_SCHEMA,
         POSTINGS_SCHEMA,
         _check_shard_span,
+        _fresh_tmp,
+        _make_dl_decoder,
         _make_run_merge_encoder,
-        shard_start,
         write_manifest,
     )
 
@@ -144,10 +144,7 @@ def build_routed_index(
     id_space = int(mx) + 1 if mx is not None else 1
     _check_shard_span(id_space, n_shards)
 
-    tmp = index_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp, exist_ok=True)
+    tmp = _fresh_tmp(index_dir)
     stage = os.path.join(tmp, "_stage")
 
     partials = (
@@ -158,32 +155,12 @@ def build_routed_index(
     )
 
     # --- docs trees + per-route stats from the dl sentinel runs ------------
-    import numpy as np
-    import pandas as pd
-
-    def _decode_dl(batches):
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                base = shard_start(int(row.shard), id_space, n_shards)
-                ids = np.frombuffer(row.ids, dtype=np.uint32).astype(np.int64) + base
-                dls = np.frombuffer(row.tfs, dtype=np.uint32).astype(np.int64)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "route": int(row.route),
-                            "doc_id": ids,
-                            "dl": dls,
-                            "shard": int(row.shard),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
     docs_rt = (
         partials.where(F.col("term") == DL_TERM)
-        .mapInPandas(_decode_dl, "route int, doc_id long, dl long, shard int")
+        .mapInArrow(
+            _make_dl_decoder(id_space, n_shards, lead=("route",)),
+            "route int, doc_id long, dl long, shard int",
+        )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     stats = {

@@ -14,10 +14,10 @@ flume-elasticsearch.conf:1-31) — maps onto Structured Streaming directly:
   gave the reference (ElasticsearchSink.java:67), here made exactly-once
   by deterministic chunk paths keyed on batch_id.
 
-Each committed micro-batch becomes an input chunk of the chunked index
-build (plans/resume.py), so "index the stream so far" is one idempotent
-``build_index_chunked``-style merge over the staged chunks — the Lucene
-flush-then-merge lifecycle (SURVEY §2.4 I5/I7) at the pipeline level.
+Each committed micro-batch is a staged chunk with a lineage record (the
+unit plans/resume.py checkpoints), so "index the stream so far" is one
+idempotent build over the committed chunks — the Lucene flush-then-merge
+lifecycle (SURVEY §2.4 I5/I7) at the pipeline level.
 """
 
 from __future__ import annotations

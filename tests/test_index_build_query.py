@@ -187,30 +187,66 @@ def test_manifest_skew_metric(index_dir):
     assert m["shard_skew_max_over_median"] < 2.0
 
 
-def test_partial_builder_equals_tf_builder(spark, documents, tmp_path_factory):
-    """The packed-run build path and the pre-aggregated-tf build path must
-    produce byte-identical postings (same blocks, same compression)."""
-    from flume_elasticsearch_2_spark.plans.build_index import (
-        build_segments,
-        build_segments_partial,
-        term_frequencies,
+def _decoded_index(spark, index_dir):
+    """Decoded postings, docs and terms rows of an index (Parquet footers
+    may list encodings in a per-JVM order, so file bytes are not compared)."""
+    cols = ["shard", "term", "n", "cf", "doc_bytes", "tf_bytes", "block_first_doc",
+            "block_last_doc", "block_max_tf", "block_min_dl"]
+    return tuple(
+        sorted(tuple(r) for r in spark.read.parquet(f"{index_dir}/{sub}").select(*c).collect())
+        for sub, c in (("postings", cols), ("docs", ["doc_id", "dl", "shard", "orig_id"]),
+                       ("terms", ["term", "df", "cf"]))
     )
 
-    root = tmp_path_factory.mktemp("paths")
-    a_dir, b_dir = str(root / "via_tf"), str(root / "via_runs")
-    tf, dl = term_frequencies(documents)
-    build_segments(spark, tf, dl, a_dir, n_shards=4)
-    build_segments_partial(spark, documents, b_dir, n_shards=4)
-    cols = ["shard", "term", "n", "cf", "doc_bytes", "tf_bytes"]
-    a = {
-        (r.shard, r.term): (r.n, r.cf, bytes(r.doc_bytes), bytes(r.tf_bytes))
-        for r in spark.read.parquet(f"{a_dir}/postings").select(cols).collect()
-    }
-    b = {
-        (r.shard, r.term): (r.n, r.cf, bytes(r.doc_bytes), bytes(r.tf_bytes))
-        for r in spark.read.parquet(f"{b_dir}/postings").select(cols).collect()
-    }
-    assert a == b
+
+@pytest.mark.parametrize("dedup", [False, True], ids=["plain", "dedup"])
+def test_chunked_build_equals_one_shot(spark, tmp_path_factory, dedup):
+    """The chunked resumable build (staged packed runs, rebased at stage 2)
+    equals a one-shot build over the same docs with the chunked build's ids
+    and id space; with dedup, over the winners of each repeated url only
+    (the corpus repeats ~2% of its urls)."""
+    from functools import reduce
+
+    from pyspark.sql.window import Window
+
+    from flume_elasticsearch_2_spark.plans.build_index import (
+        assign_doc_ids,
+        build_segments_partial,
+    )
+    from flume_elasticsearch_2_spark.plans.resume import build_index_chunked, plan_chunks
+    from flume_elasticsearch_2_spark.sources.webpages import write_webpages
+    from pyspark.sql import functions as F
+
+    root = tmp_path_factory.mktemp("chunked")
+    corpus = str(root / "corpus")
+    write_webpages(spark, 500, corpus, n_partitions=5)
+    chunked = build_index_chunked(
+        spark, corpus, str(root / "chunked"), str(root / "work"),
+        n_shards=4, files_per_chunk=2, dedup=dedup,
+    )
+    # the chunked build's ids: keyed local order within a chunk, offset by
+    # the doc counts of the chunks before it
+    parts, offset = [], 0
+    for ch in plan_chunks(corpus, files_per_chunk=2):
+        ids = assign_doc_ids(spark.read.parquet(*ch["files"]), tie_cols=["warc_ts"])
+        parts.append(ids.withColumn("doc_id", F.col("doc_id") + offset))
+        offset += ids.count()
+    assert len(parts) == 3 and chunked["id_space"] == offset
+    docs = reduce(lambda a, b: a.unionByName(b), parts)
+    if dedup:
+        w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc(), F.col("doc_id").desc())
+        docs = docs.withColumn("_rn", F.row_number().over(w)).where("_rn = 1")
+    one_shot = build_segments_partial(
+        spark, docs, str(root / "one_shot"), n_shards=4, id_space=offset,
+        orig_ids=docs.select("doc_id", F.col("url").alias("orig_id")),
+    )
+    assert chunked["n_docs"] == one_shot["n_docs"] == docs.count()
+    assert (chunked["n_docs"] < offset) == dedup
+    assert chunked["avgdl"] == one_shot["avgdl"]
+    assert chunked["postings_per_shard"] == one_shot["postings_per_shard"]
+    assert _decoded_index(spark, str(root / "chunked")) == _decoded_index(
+        spark, str(root / "one_shot")
+    )
 
 
 def test_segment_phrase_matches_declarative(spark, documents, tmp_path_factory):
@@ -692,12 +728,17 @@ def test_manifest_bytes_are_reproducible(spark, tmp_path_factory):
     assert b"built_wall_s" not in blobs[0][0]
 
 
-def test_run_merge_encoder_carries_groups_across_batches():
+def test_run_merge_encoder_carries_groups_across_batches(tmp_path):
     """The run-merge encoder gives the same rows whether a partition's
     (shard, term) groups arrive in one Arrow batch or cut at every row,
-    including interleaved runs and positional runs."""
+    including interleaved runs and positional runs. The docs table is the
+    liveness set: with every doc present the rows are those of an encoder
+    without docs table (but for ``block_min_dl``); postings whose docs are
+    missing are dropped with their positions, exactly as if no run held
+    them, and a group whose docs are all missing emits no row."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from flume_elasticsearch_2_spark.plans.build_index import (
         PARTIAL_COLS,
@@ -705,7 +746,7 @@ def test_run_merge_encoder_carries_groups_across_batches():
     )
 
     rng = np.random.default_rng(3)
-    rows = []
+    runs = []  # (shard, term, shard-local ids, tfs, with positions)
     for shard in (0, 1):
         for term in ("a", "b", "c"):
             ids = np.unique(rng.integers(0, 500, size=40)).astype(np.uint32)
@@ -713,24 +754,60 @@ def test_run_merge_encoder_carries_groups_across_batches():
             for r in range(3):
                 sel = ids[run == r]
                 tfs = rng.integers(1, 4, size=sel.size).astype(np.uint32)
-                pos = np.concatenate(
-                    [np.arange(t, dtype=np.uint32) for t in tfs]
-                ) if term != "c" else np.empty(0, np.uint32)
-                if sel.size:
-                    rows.append((shard, term, int(sel[0]) + shard * 500,
-                                 sel.tobytes(), tfs.tobytes(), pos.tobytes()))
-    rows.sort(key=lambda r: r[:3])
-    cols = list(zip(*rows))
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(cols[0], pa.int32()), pa.array(cols[1]), pa.array(cols[2], pa.int64()),
-         *(pa.array(c, pa.binary()) for c in cols[3:])],
-        names=PARTIAL_COLS,
-    )
-    enc = _make_run_merge_encoder(1000, 2)
-    whole = pa.Table.from_batches(list(enc(iter([batch]))))
-    cut = pa.Table.from_batches(
-        list(enc(iter([batch.slice(i, 1) for i in range(batch.num_rows)])))
-    )
+                runs.append((shard, term, sel, tfs, term != "c"))
+
+    def encode(docs_dir, runs, dead=frozenset()):
+        rows = []
+        for shard, term, ids, tfs, with_pos in runs:
+            keep = ~np.isin(ids.astype(np.int64) + shard * 500, list(dead))
+            ids, tfs = ids[keep], tfs[keep]
+            pos = np.concatenate(
+                [np.arange(t, dtype=np.uint32) for t in tfs]
+            ) if with_pos and ids.size else np.empty(0, np.uint32)
+            if ids.size:
+                rows.append((shard, term, int(ids[0]) + shard * 500,
+                             ids.tobytes(), tfs.tobytes(), pos.tobytes()))
+        rows.sort(key=lambda r: r[:3])
+        cols = list(zip(*rows))
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(cols[0], pa.int32()), pa.array(cols[1]), pa.array(cols[2], pa.int64()),
+             *(pa.array(c, pa.binary()) for c in cols[3:])],
+            names=PARTIAL_COLS,
+        )
+        enc = _make_run_merge_encoder(1000, 2, docs_dir=docs_dir)
+        whole = pa.Table.from_batches(list(enc(iter([batch]))))
+        cut = pa.Table.from_batches(
+            list(enc(iter([batch.slice(i, 1) for i in range(batch.num_rows)])))
+        )
+        assert whole.equals(cut)
+        return whole
+
+    whole = encode(None, runs)
     assert whole.num_rows == 6
-    assert whole.equals(cut)
     assert whole.column("pos_bytes").to_pylist()[2::3] == [b"", b""]  # term "c"
+
+    def docs_dir(name, ids):
+        for shard in (0, 1):
+            sel = ids[(ids >= shard * 500) & (ids < (shard + 1) * 500)]
+            (tmp_path / name / f"shard={shard}").mkdir(parents=True)
+            pq.write_table(pa.table({"doc_id": sel, "dl": 3 + sel % 7}),
+                           tmp_path / name / f"shard={shard}" / "part-0.parquet")
+        return str(tmp_path / name)
+
+    all_docs = docs_dir("all", np.arange(1000))
+    present = encode(all_docs, runs)
+
+    def no_min_dl(t):
+        return t.select([c for c in t.column_names if c != "block_min_dl"])
+
+    assert no_min_dl(present).equals(no_min_dl(whole))
+    dead_group = np.arange(100, 140, 3, dtype=np.uint32)  # shard 1, term "d"
+    runs_d = runs + [(1, "d", dead_group, np.full(dead_group.size, 2, np.uint32), True)]
+    dead = set(rng.choice(1000, size=200, replace=False).tolist()) | set(
+        (dead_group.astype(np.int64) + 500).tolist()
+    )
+    live_docs = docs_dir("live", np.setdiff1d(np.arange(1000), sorted(dead)))
+    got = encode(live_docs, runs_d)
+    assert got.column("term").to_pylist() == ["a", "b", "c"] * 2
+    assert got.equals(encode(all_docs, runs, dead))
+    assert sum(got.column("n").to_pylist()) < sum(present.column("n").to_pylist())

@@ -767,6 +767,40 @@ def test_index_webpages_job_count(spark, tmp_path_factory):
     assert len(jobs) <= 28, jobs
 
 
+def test_chunked_build_job_count(spark, tmp_path_factory):
+    """The chunked resumable build tokenizes each chunk once (the tokenize
+    accumulator counts every doc exactly once) and no stage-1 job re-reads
+    what the chunk just wrote: 10 jobs per chunk (15 with the tf-row
+    staging, whose docmeta write re-tokenized the chunk and whose postings
+    count re-read it). A fully committed re-run is stage 2 alone: it
+    tokenizes nothing and runs the finalize's jobs, with no id-space pass
+    (the id space is the sum of the chunks' doc counts)."""
+    from flume_elasticsearch_2_spark.plans.resume import build_index_chunked
+    from flume_elasticsearch_2_spark.sources.webpages import write_webpages
+
+    base = tmp_path_factory.mktemp("chunkjobs")
+    corpus = str(base / "corpus")
+    write_webpages(spark, 300, corpus, n_partitions=4)
+    sc = spark.sparkContext
+    runs = {}
+    for name in ("fresh", "rerun"):
+        acc = sc.accumulator(0)
+        try:
+            sc.setJobGroup(f"hyg-chunked-{name}", name)
+            manifest = build_index_chunked(
+                spark, corpus, str(base / "idx"), str(base / "work"),
+                n_shards=4, files_per_chunk=2, tokenize_counter=acc,
+            )
+            runs[name] = (len(_group_jobs(sc, f"hyg-chunked-{name}")), acc.value)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert manifest["chunks"] == 2 and manifest["id_space"] == 300
+    (fresh, tokenized), (stage2, retokenized) = runs["fresh"], runs["rerun"]
+    assert (tokenized, retokenized) == (300, 0)
+    assert stage2 <= 18, runs
+    assert fresh - stage2 <= 2 * 10, runs
+
+
 def test_suggest_and_termvector_pages_start_no_extra_job(spark, tmp_path_factory):
     """The suggesters read the terms/ dictionary with pyarrow and return a
     local relation: no Spark job. termvectors / mtermvectors run only
